@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact, peek
 from ..session import load_tables
 from .text import tokens
 
@@ -179,19 +180,11 @@ GROUP BY doc_id ORDER BY doc_id
 # pipeline materializes pairs once, it never re-shingles the corpus per
 # consumer. Cached per (session, sf_dir); localCheckpoint so it survives
 # catalog.clearCache() like an on-disk stage output would.
-_LSH_PAIRS_CACHE: dict[str, DataFrame] = {}
-
-
+@artifact
 def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # applicationId, not id(spark): a restarted session must rebuild, and
-    # a recycled object address must never resurrect a dead checkpoint
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _LSH_PAIRS_CACHE:
-        return _LSH_PAIRS_CACHE[key]
     pairs, bands = _lsh_pairs_plan(spark, sf_dir)
     pairs = pairs.localCheckpoint()
     bands.unpersist()
-    _LSH_PAIRS_CACHE[key] = pairs
     return pairs
 
 
@@ -273,32 +266,26 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
 
 
-_PROBE_INDEX_CACHE: dict[str, str] = {}
 PROBE_JACC_PCT = 50
 
 
+@artifact
 def _probe_index_root(spark: SparkSession, sf_dir: str) -> str:
     """The STORED corpus-side LSH index, built once per session: the
     (band, bkey, doc_id) posting table written to Parquet — the durable
     artifact an always-on dedup service maintains between batches. At
     100 TB this table is bucketed by (band, bkey) and grows by appends;
     arriving batches never re-shingle the corpus, only read this."""
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _PROBE_INDEX_CACHE:
-        return _PROBE_INDEX_CACHE[key]
     import tempfile
 
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     corpus = d.filter(F.col("doc_id") % 5 != 0)
     root = tempfile.mkdtemp(prefix="grebi_lsh_index_")
     _band_table(corpus).write.mode("overwrite").parquet(root)
-    _PROBE_INDEX_CACHE[key] = root
     return root
 
 
-_PROBE_ART_CACHE: dict[str, tuple[DataFrame, DataFrame]] = {}
-
-
+@artifact
 def _probe_artifacts(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -311,9 +298,6 @@ def _probe_artifacts(
     timed invocations (bench/soak run each query many times) must reuse
     ONE persisted copy instead of stacking a fresh persist +
     checkpoint's blocks in executor storage per run."""
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _PROBE_ART_CACHE:
-        return _PROBE_ART_CACHE[key]
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     stored = spark.read.parquet(_probe_index_root(spark, sf_dir))
     batch = docs.filter(F.col("doc_id") % 5 == 0)
@@ -340,7 +324,6 @@ def _probe_artifacts(
     sh = need.select(
         "doc_id", F.explode(word_shingles(F.col("text"))).alias("s")
     ).persist()
-    _PROBE_ART_CACHE[key] = (cand, sh)
     return cand, sh
 
 
@@ -532,12 +515,6 @@ ORDER BY s.doc_id
 
 JACCARD_T = 0.5  # similarity threshold for the exact n-gram dedup
 
-# exact-pair table cached per (session, sf_dir) — shared by the dedup
-# query and the LSH-evaluation harness (dedup_eval_metrics), the same
-# stage-artifact contract as _lsh_pairs
-_JACCARD_CACHE: dict[str, DataFrame] = {}
-
-
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard dedup over the FULL table via prefix filtering
     (the AllPairs candidate bound, Bayardo et al., WWW'07).
@@ -556,10 +533,15 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     hold the lowest-df shingles — and a candidate-sized verify join. No
     stage is quadratic in the corpus.
     """
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _JACCARD_CACHE:
-        _JACCARD_CACHE[key] = _jaccard_pairs_plan(spark, sf_dir).localCheckpoint()
-    return _JACCARD_CACHE[key].orderBy("doc_a", "doc_b")
+    return _jaccard_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
+
+
+# exact-pair table cached per (session, sf_dir) — shared by the dedup
+# query and the LSH-evaluation harness (dedup_eval_metrics), the same
+# stage-artifact contract as _lsh_pairs
+@artifact
+def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _jaccard_pairs_plan(spark, sf_dir).localCheckpoint()
 
 
 def _jaccard_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -921,30 +903,23 @@ ORDER BY vec_a, vec_b
 # the component loop per consumer (guide §1.2; the same contract as
 # _lsh_pairs above). localCheckpoint so it survives the bench's
 # per-query clearCache() like an on-disk stage output would.
-_LSH_CC_CACHE: dict[str, DataFrame] = {}
-
-
 def lsh_components_cached(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     """The session-scoped CC-labelling artifact, or None when it has not
     been built yet — the observable accessor tests use to assert the
     labelling is shared, instead of reaching into the private memo and
     reconstructing its key format (r9 ADVICE)."""
-    return _LSH_CC_CACHE.get(f"{spark.sparkContext.applicationId}:{sf_dir}")
+    return peek(_lsh_components, spark, sf_dir)
 
 
+@artifact
 def _lsh_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _LSH_CC_CACHE:
-        return _LSH_CC_CACHE[key]
     from ..operators.groups import connected_components
 
     edges = _lsh_pairs(spark, sf_dir).select(
         F.col("doc_a").cast("string").alias("src"),
         F.col("doc_b").cast("string").alias("dst"),
     )
-    cc = connected_components(edges).localCheckpoint()
-    _LSH_CC_CACHE[key] = cc
-    return cc
+    return connected_components(edges).localCheckpoint()
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1406,7 +1381,7 @@ def dedup_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall is what data quality lives on (a missed duplicate trains
     twice); precision only prices the verify stage.
 
-    Both legs are shared stage artifacts (_lsh_pairs, _JACCARD_CACHE) —
+    Both legs are shared stage artifacts (_lsh_pairs, _jaccard_pairs) —
     the harness reads what the dedup queries built, it never recomputes
     the pipelines. The comparison itself is one full-outer equi-join on
     the pair key plus a 1-row rollup. Ratios are single IEEE divisions

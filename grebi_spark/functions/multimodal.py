@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..artifacts import artifact
 from ..session import load_tables
 
 FEATURE_SCHEMA = T.StructType(
@@ -146,21 +147,23 @@ def sample_frames(
     return binary_df.mapInPandas(run, schema=FRAME_SCHEMA)
 
 
+@artifact
+def _frames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_tables(spark, sf_dir, ("documents",))["documents"]
+    par = spark.sparkContext.defaultParallelism
+    binary = d.repartition(par).select(
+        "doc_id", F.encode("text", "UTF-8").alias("payload")
+    )
+    # persist before the global sort: range partitioning samples its
+    # bounds with a separate pass, which would re-run the decode
+    # stage; session-cached so repeated timed runs reuse ONE copy
+    return sample_frames(binary).persist()
+
+
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents' bytes as fake video: frame-sample every 4th 16-byte
     frame, one output row per kept frame."""
-    key = f"frames:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _PIX_CACHE:
-        d = load_tables(spark, sf_dir, ("documents",))["documents"]
-        par = spark.sparkContext.defaultParallelism
-        binary = d.repartition(par).select(
-            "doc_id", F.encode("text", "UTF-8").alias("payload")
-        )
-        # persist before the global sort: range partitioning samples its
-        # bounds with a separate pass, which would re-run the decode
-        # stage; session-cached so repeated timed runs reuse ONE copy
-        _PIX_CACHE[key] = sample_frames(binary).persist()
-    return _PIX_CACHE[key].orderBy("doc_id", "frame_idx")
+    return _frames(spark, sf_dir).orderBy("doc_id", "frame_idx")
 
 
 # the corpus text is ASCII, so char offsets == byte offsets (the features
@@ -174,23 +177,25 @@ ORDER BY doc_id, frame_idx
 """
 
 
+@artifact
+def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_tables(spark, sf_dir, ("documents",))["documents"]
+    # decode is CPU-bound and the input is a single parquet split —
+    # spread the Arrow batches across cores first
+    par = spark.sparkContext.defaultParallelism
+    binary = d.repartition(par).select(
+        "doc_id", F.encode("text", "UTF-8").alias("payload")
+    )
+    # persist before the global sort: the range-partitioning
+    # sampling pass would otherwise execute the mapInPandas decode
+    # twice; session-cached so repeated timed runs reuse ONE copy
+    return extract_features(binary).persist()
+
+
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Treat document text bytes as an opaque payload: binary column →
     mapInPandas decode-stub → typed features."""
-    key = f"features:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _PIX_CACHE:
-        d = load_tables(spark, sf_dir, ("documents",))["documents"]
-        # decode is CPU-bound and the input is a single parquet split —
-        # spread the Arrow batches across cores first
-        par = spark.sparkContext.defaultParallelism
-        binary = d.repartition(par).select(
-            "doc_id", F.encode("text", "UTF-8").alias("payload")
-        )
-        # persist before the global sort: the range-partitioning
-        # sampling pass would otherwise execute the mapInPandas decode
-        # twice; session-cached so repeated timed runs reuse ONE copy
-        _PIX_CACHE[key] = extract_features(binary).persist()
-    return _PIX_CACHE[key].orderBy("doc_id")
+    return _features(spark, sf_dir).orderBy("doc_id")
 
 
 ORACLE_MULTIMODAL = """
@@ -206,7 +211,6 @@ FROM documents ORDER BY doc_id
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _IMG_TOPK = 50
-_PIX_CACHE: dict[str, DataFrame] = {}
 
 
 def build_png(doc_id: int) -> bytes:
@@ -391,20 +395,8 @@ def parse_jpeg_header(payload: bytes) -> dict:
     return bad
 
 
-_JPEG_CACHE: dict[str, DataFrame] = {}
-
-
-def multimodal_jpeg_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JPEG metadata extraction over a MATERIALIZED binary column: stage
-    1 builds each doc's spec-exact JPEG/JFIF container and persists it
-    as `payload binary`; stage 2 walks the FF-marker segments from that
-    column only (SOI → APP0 → SOF0) — the dimension/precision gate an
-    image-curation pipeline runs before committing to a codec. The
-    closed-form oracle recomputes the dimensions, so a one-byte segment
-    -length error or a wrong field offset hash-mismatches. (JPEG PIXEL
-    decode is also real now — `decode_jpeg_pixels`, exercised by
-    `multimodal_pixel_stats`' mixed corpus; this query remains the
-    cheap header-only gate that runs before committing to a codec.)"""
+@artifact
+def _jpeg_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
@@ -426,19 +418,30 @@ def multimodal_jpeg_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.insert(0, "doc_id", batch["doc_id"].values)
             yield out
 
-    key = f"jpeghdr:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _JPEG_CACHE:
-        payloads = ids.mapInPandas(
-            build, schema="doc_id long, payload binary"
-        ).persist()
-        _JPEG_CACHE[key] = payloads.mapInPandas(
-            run,
-            schema=(
-                "doc_id long, width int, height int, precision int, "
-                "n_components int, is_jfif boolean"
-            ),
-        ).persist()
-    return _JPEG_CACHE[key].orderBy("doc_id").limit(_IMG_TOPK)
+    payloads = ids.mapInPandas(
+        build, schema="doc_id long, payload binary"
+    ).persist()
+    return payloads.mapInPandas(
+        run,
+        schema=(
+            "doc_id long, width int, height int, precision int, "
+            "n_components int, is_jfif boolean"
+        ),
+    ).persist()
+
+
+def multimodal_jpeg_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JPEG metadata extraction over a MATERIALIZED binary column: stage
+    1 builds each doc's spec-exact JPEG/JFIF container and persists it
+    as `payload binary`; stage 2 walks the FF-marker segments from that
+    column only (SOI → APP0 → SOF0) — the dimension/precision gate an
+    image-curation pipeline runs before committing to a codec. The
+    closed-form oracle recomputes the dimensions, so a one-byte segment
+    -length error or a wrong field offset hash-mismatches. (JPEG PIXEL
+    decode is also real now — `decode_jpeg_pixels`, exercised by
+    `multimodal_pixel_stats`' mixed corpus; this query remains the
+    cheap header-only gate that runs before committing to a codec.)"""
+    return _jpeg_headers(spark, sf_dir).orderBy("doc_id").limit(_IMG_TOPK)
 
 
 ORACLE_JPEG_HEADERS = f"""
@@ -2104,30 +2107,8 @@ def decode_jpeg_pixels(payload: bytes) -> dict:
     }
 
 
-def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image CONTENT statistics over a MIXED-FORMAT binary column with
-    the pixel decode REAL end to end for both codecs — and the binary
-    column REAL too: stage 1 builds each doc's complete spec-valid
-    image (doc_id mod 4 → gray / RGB / palette PNG, alternating
-    Adam7-interlaced, or a JPEG with a real Huffman-coded scan —
-    alternating grayscale 4:4:4 and COLOR 4:2:0 with subsampled
-    chroma, separate chroma quant/Huffman tables and padded luma MCUs,
-    the grayscale half further alternating baseline and PROGRESSIVE
-    (four real SOF2 scans: successive-approximation DC, split-band
-    EOB-run ACs, DC refinement); ``build_jpeg_image``/``_420``/
-    ``_progressive``) and MATERIALIZES it as a
-    persisted `payload binary` column; stage 2 decodes FROM that column
-    only (it never sees doc_id→bytes), SNIFFING the container signature
-    per payload — the realistic shape: a curation pipeline's image
-    column is never single-format. PNGs inflate through zlib + the five
-    scanline filters (``decode_png_pixels``); JPEGs run the full
-    baseline pipeline — Huffman entropy decode, DC prediction, restart
-    markers on odd ids, dequant, IDCT (``decode_jpeg_pixels``). The
-    decoder's Paeth/IDCT are implemented independently of the encoder
-    and the suite pins byte-literal fixtures, so a symmetric
-    encoder/decoder bug cannot round-trip invisibly; the closed-form
-    oracle recomputes every pixel, so one wrong filter branch, a
-    one-byte stride error, or a Huffman off-by-one hash-mismatches."""
+@artifact
+def _pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = _mixed_image_payloads(spark, sf_dir)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2158,18 +2139,43 @@ def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reuse ONE persisted copy instead of stacking blocks per
     # invocation (the dedup._probe_artifacts / text._bigram_rows
     # contract)
-    key = f"pixstats:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _PIX_CACHE:
-        _PIX_CACHE[key] = payloads.mapInPandas(
-            run,
-            schema=(
-                "doc_id long, width long, height long, pixel_sum long, "
-                "pixel_min long, pixel_max long"
-            ),
-        ).persist()
-    return _PIX_CACHE[key].orderBy("doc_id").limit(_IMG_TOPK)
+    return payloads.mapInPandas(
+        run,
+        schema=(
+            "doc_id long, width long, height long, pixel_sum long, "
+            "pixel_min long, pixel_max long"
+        ),
+    ).persist()
 
 
+def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image CONTENT statistics over a MIXED-FORMAT binary column with
+    the pixel decode REAL end to end for both codecs — and the binary
+    column REAL too: stage 1 builds each doc's complete spec-valid
+    image (doc_id mod 4 → gray / RGB / palette PNG, alternating
+    Adam7-interlaced, or a JPEG with a real Huffman-coded scan —
+    alternating grayscale 4:4:4 and COLOR 4:2:0 with subsampled
+    chroma, separate chroma quant/Huffman tables and padded luma MCUs,
+    the grayscale half further alternating baseline and PROGRESSIVE
+    (four real SOF2 scans: successive-approximation DC, split-band
+    EOB-run ACs, DC refinement); ``build_jpeg_image``/``_420``/
+    ``_progressive``) and MATERIALIZES it as a
+    persisted `payload binary` column; stage 2 decodes FROM that column
+    only (it never sees doc_id→bytes), SNIFFING the container signature
+    per payload — the realistic shape: a curation pipeline's image
+    column is never single-format. PNGs inflate through zlib + the five
+    scanline filters (``decode_png_pixels``); JPEGs run the full
+    baseline pipeline — Huffman entropy decode, DC prediction, restart
+    markers on odd ids, dequant, IDCT (``decode_jpeg_pixels``). The
+    decoder's Paeth/IDCT are implemented independently of the encoder
+    and the suite pins byte-literal fixtures, so a symmetric
+    encoder/decoder bug cannot round-trip invisibly; the closed-form
+    oracle recomputes every pixel, so one wrong filter branch, a
+    one-byte stride error, or a Huffman off-by-one hash-mismatches."""
+    return _pixel_stats(spark, sf_dir).orderBy("doc_id").limit(_IMG_TOPK)
+
+
+@artifact
 def _mixed_image_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MATERIALIZED mixed-format image column the decode queries
     share: one persisted ``doc_id, payload binary`` frame per
@@ -2183,9 +2189,6 @@ def _mixed_image_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
-    key = f"imgpayloads:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _PIX_CACHE:
-        return _PIX_CACHE[key]
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     par = spark.sparkContext.defaultParallelism
     ids = d.select("doc_id").repartition(par)
@@ -2221,10 +2224,7 @@ def _mixed_image_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    _PIX_CACHE[key] = ids.mapInPandas(
-        build, schema="doc_id long, payload binary"
-    ).persist()
-    return _PIX_CACHE[key]
+    return ids.mapInPandas(build, schema="doc_id long, payload binary").persist()
 
 
 def decode_image_array(payload: bytes):
@@ -2257,25 +2257,8 @@ def resize_image_nearest(arr, out_h: int, out_w: int):
 _THUMB = 4  # thumbnail side for multimodal_resize_stats
 
 
-def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image RESIZE over the materialized mixed-format binary column —
-    the third real content operator of the multimodal family (decode →
-    stats, decode → RESIZE → stats): every payload is sniffed, decoded
-    through the full real PNG/JPEG pipeline (incl. Adam7, progressive
-    SOF2 and subsampled 4:2:0 members), downsampled to a 4×4
-    nearest-neighbor thumbnail (``resize_image_nearest``), and reduced
-    to exact integer thumbnail statistics. The oracle samples the same
-    closed-form pixels at the same integer source coordinates, so a
-    one-off in the coordinate mapping, a channel-order swap, or any
-    decoder regression hash-mismatches.
-
-    Scale notes: the resize runs in the same Arrow-batched
-    ``mapInPandas`` pass as the decode (no second scan of the binary
-    column), and the payload frame is the SHARED persisted asset
-    (``_mixed_image_payloads``) — pixel stats and resize never build
-    the corpus twice. The thumbnail gather is one numpy fancy-index
-    per image; swapping in a real resampler (PIL/torch) would change
-    only ``resize_image_nearest``, not the plan."""
+@artifact
+def _resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = _mixed_image_payloads(spark, sf_dir)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2297,16 +2280,35 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    key = f"resize:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _PIX_CACHE:
-        _PIX_CACHE[key] = payloads.mapInPandas(
-            run,
-            schema=(
-                "doc_id long, width long, height long, thumb_sum long, "
-                "thumb_min long, thumb_max long"
-            ),
-        ).persist()
-    return _PIX_CACHE[key].orderBy("doc_id").limit(_IMG_TOPK)
+    return payloads.mapInPandas(
+        run,
+        schema=(
+            "doc_id long, width long, height long, thumb_sum long, "
+            "thumb_min long, thumb_max long"
+        ),
+    ).persist()
+
+
+def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image RESIZE over the materialized mixed-format binary column —
+    the third real content operator of the multimodal family (decode →
+    stats, decode → RESIZE → stats): every payload is sniffed, decoded
+    through the full real PNG/JPEG pipeline (incl. Adam7, progressive
+    SOF2 and subsampled 4:2:0 members), downsampled to a 4×4
+    nearest-neighbor thumbnail (``resize_image_nearest``), and reduced
+    to exact integer thumbnail statistics. The oracle samples the same
+    closed-form pixels at the same integer source coordinates, so a
+    one-off in the coordinate mapping, a channel-order swap, or any
+    decoder regression hash-mismatches.
+
+    Scale notes: the resize runs in the same Arrow-batched
+    ``mapInPandas`` pass as the decode (no second scan of the binary
+    column), and the payload frame is the SHARED persisted asset
+    (``_mixed_image_payloads``) — pixel stats and resize never build
+    the corpus twice. The thumbnail gather is one numpy fancy-index
+    per image; swapping in a real resampler (PIL/torch) would change
+    only ``resize_image_nearest``, not the plan."""
+    return _resize_stats(spark, sf_dir).orderBy("doc_id").limit(_IMG_TOPK)
 
 
 ORACLE_RESIZE = f"""

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact
 from ..session import load_tables
 from .num import half_up_np
 
@@ -57,24 +58,29 @@ def sign_bucket(vec: Column, n_planes: int = N_PLANES) -> Column:
 # driver-side point lookups are tiny but these queries run in loops from
 # the bench/driver — cache per (sf_dir, vec_id) so repeat invocations
 # skip the lookup job entirely
-_VEC_CACHE: dict[tuple[str, int], list[float]] = {}
+@artifact
+def _query_vector(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]:
+    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
+    row = e.filter(F.col("vec_id") == vec_id).select("embedding").head()
+    return [float(x) for x in row["embedding"]]
 
 
-def _query_vector(df: DataFrame, sf_dir: str = "", vec_id: int = 0):
-    key = (df.sparkSession.sparkContext.applicationId, sf_dir, vec_id)
-    if sf_dir and key in _VEC_CACHE:
-        return _VEC_CACHE[key]
-    row = df.filter(F.col("vec_id") == vec_id).select("embedding").head()
-    vec = [float(x) for x in row["embedding"]]
-    if sf_dir:
-        _VEC_CACHE[key] = vec
-    return vec
+@artifact
+def _seed_vectors(spark: SparkSession, sf_dir: str, upto: int) -> dict[int, list[float]]:
+    """vec_id → vector for vec_ids 0..upto (query + deterministic seeds)."""
+    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
+    rows = (
+        e.filter((F.col("vec_id") >= 0) & (F.col("vec_id") <= upto))
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    return {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in rows}
 
 
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 for the query vector (vec_id 0)."""
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    q = F.array(*[F.lit(x) for x in _query_vector(e, sf_dir)])
+    q = F.array(*[F.lit(x) for x in _query_vector(spark, sf_dir)])
     v = as_double(F.col("embedding"))
     return (
         e.filter(F.col("vec_id") != 0)
@@ -106,7 +112,7 @@ LIMIT 10
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed ANN: probe only the query's sign-bit bucket, top-5 there."""
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    qv = _query_vector(e, sf_dir)
+    qv = _query_vector(spark, sf_dir)
     q = F.array(*[F.lit(x) for x in qv])
     q_bucket = sum((1 << i) for i in range(N_PLANES) if qv[i] >= 0)
     v = as_double(F.col("embedding"))
@@ -147,14 +153,6 @@ LIMIT 5
 
 N_CELLS = 16   # IVF cells (seed vectors stand in for k-means centroids)
 N_PROBE = 4    # cells probed per query
-_IVF_SEED_CACHE: dict[str, dict[int, list[float]]] = {}
-# one persisted cell-assignment HANDLE per (session, sf_dir): repeated
-# invocations in a long-lived session reuse a single persisted frame
-# instead of stacking a new persist() per call (r9 ADVICE). The bench's
-# per-query clearCache() still evicts the DATA, so every timed run
-# recomputes the assignment — only the handle (and thus the storage
-# entry) is shared.
-_IVF_ASSIGN_CACHE: dict[str, DataFrame] = {}
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,38 +169,49 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors cluster weakly — the structure, not the recall, is the
     contract here).
     """
-    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    seed_key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    byid = _IVF_SEED_CACHE.get(seed_key)
-    if byid is None:
-        rows = (
-            e.filter((F.col("vec_id") >= 0) & (F.col("vec_id") <= N_CELLS))
-            .select("vec_id", "embedding")
-            .collect()
-        )
-        byid = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in rows}
-        _IVF_SEED_CACHE[seed_key] = byid
+    byid = _seed_vectors(spark, sf_dir, N_CELLS)
     qv, cents = byid[0], [byid[i] for i in range(1, N_CELLS + 1)]
-
-    def pydot(a, b):
-        s = 0.0
-        for x, y in zip(a, b):
-            s += x * y
-        return s
 
     # driver-side probe selection (tiny: N_CELLS cosines) — same float
     # sequence as the engines' sequential dot-product folds
-    qn = pydot(qv, qv) ** 0.5
+    qn = _pydot(qv, qv) ** 0.5
     probe = sorted(
         range(1, N_CELLS + 1),
         key=lambda i: (
-            -pydot(qv, cents[i - 1]) / (qn * pydot(cents[i - 1], cents[i - 1]) ** 0.5),
+            -_pydot(qv, cents[i - 1]) / (qn * _pydot(cents[i - 1], cents[i - 1]) ** 0.5),
             i,
         ),
     )[:N_PROBE]
 
     import math
 
+    q_norm = math.sqrt(_pydot(qv, qv))
+    q = F.array(*[F.lit(float(x)) for x in qv])
+    cos_q = dot(F.col("_vd"), q) / (F.col("_nv") * F.lit(q_norm))
+    return (
+        _ivf_assignment(spark, sf_dir)
+        .filter(F.col("cell").isin(probe) & (F.col("vec_id") != 0))
+        .select("vec_id", "cell", F.round(cos_q, 4).alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), "vec_id")
+        .limit(5)
+    )
+
+
+def _pydot(a, b):
+    s = 0.0
+    for x, y in zip(a, b):
+        s += x * y
+    return s
+
+
+@artifact
+def _ivf_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every vector's argmax-cosine seed cell, persisted."""
+    import math
+
+    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
+    byid = _seed_vectors(spark, sf_dir, N_CELLS)
+    cents = [byid[i] for i in range(1, N_CELLS + 1)]
     # Cell assignment, restructured for one evaluation per row (the old
     # form cost ~3× the folds it needed — guide §1.2 "don't compute
     # things twice", §7.2 duplicated-subtree check):
@@ -221,12 +230,15 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # - the persist() pins the assignment so the probe filter reads the
     #   computed `cell` instead of being pushed below the projection and
     #   re-evaluating the whole 16-cosine argmax per row (the plan showed
-    #   the full array_max duplicated into the Filter). In-query persist
-    #   only — rebuilt on every invocation (the bench clears cache per
-    #   query); production serves assignments from the cell-partitioned
+    #   the full array_max duplicated into the Filter, the r9 defect
+    #   plan-gated by
+    #   test_ann_ivf_cell_assignment_not_duplicated_into_filter). One
+    #   persisted HANDLE per (session, sf_dir); the bench's per-query
+    #   clearCache() still evicts the DATA, so every timed run recomputes
+    #   the assignment, and the registry re-registers the persist on the
+    #   next call. Production serves assignments from the cell-partitioned
     #   stored index (ann_index_persist_topk), not this in-session frame.
-    cent_norms = [math.sqrt(pydot(c, c)) for c in cents]
-    q_norm = math.sqrt(pydot(qv, qv))
+    cent_norms = [math.sqrt(_pydot(c, c)) for c in cents]
     nv = F.col("_nv")
     vd = F.col("_vd")
     cos_cells = F.array(
@@ -241,33 +253,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(1, N_CELLS + 1)
         ]
     )
-    q = F.array(*[F.lit(float(x)) for x in qv])
-    assigned = _IVF_ASSIGN_CACHE.get(seed_key)
-    if assigned is None:
-        assigned = (
-            e.select("vec_id", as_double(F.col("embedding")).alias("_vd"))
-            .withColumn("_nv", F.sqrt(dot(vd, vd)))
-            .withColumn("cell", F.array_max(cos_cells)["cell"])
-        )
-        _IVF_ASSIGN_CACHE[seed_key] = assigned
-    if not (assigned.storageLevel.useMemory or assigned.storageLevel.useDisk):
-        # (re-)register the persist: a catalog.clearCache() (the bench
-        # runs one per query) evicts the entry from the CacheManager,
-        # and without an ACTIVE registration the persist barrier
-        # disappears from the plan — the probe filter would be pushed
-        # below the projection and re-evaluate the whole argmax per row
-        # (the r9 defect this persist exists to prevent, plan-gated by
-        # test_ann_ivf_cell_assignment_not_duplicated_into_filter).
-        assigned.persist()
     return (
-        assigned.filter(F.col("cell").isin(probe) & (F.col("vec_id") != 0))
-        .select(
-            "vec_id",
-            "cell",
-            F.round(dot(vd, q) / (nv * F.lit(q_norm)), 4).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(5)
+        e.select("vec_id", as_double(F.col("embedding")).alias("_vd"))
+        .withColumn("_nv", F.sqrt(dot(vd, vd)))
+        .withColumn("cell", F.array_max(cos_cells)["cell"])
+        .persist()
     )
 
 
@@ -513,22 +503,18 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking. Scale shape: assignment is a map-only pass against K
     broadcast literal centroids; written partitioned by cell, a query
     scan prunes to nprobe/K of the data."""
-    from .training import _CENT_CACHE as _KM_CACHE
-    from .training import _cache_key, _euclid_dist, assign_routed, kmeans_embeddings
+    from .training import _euclid_dist, assign_routed, centroids
 
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    ckey = _cache_key(spark, sf_dir)
-    if ckey not in _KM_CACHE:
-        kmeans_embeddings(spark, sf_dir)  # trains + caches the centroids
-    cents = _KM_CACHE[ckey]
-    qv = _query_vector(e, sf_dir)
+    cents = centroids(spark, sf_dir)
+    qv = _query_vector(spark, sf_dir)
     probe_ids = _probe_cells(cents, qv, IVF_NPROBE_TRAINED)
 
     v = as_double(F.col("embedding"))
     q = F.array(*[F.lit(x) for x in qv])
     # the gated two-level router (n·2√K) instead of the flat n·K argmin —
     # the oracle's ``sel`` CTE mirrors the same gate decision
-    best = assign_routed(spark, sf_dir, e, v)
+    best = assign_routed(spark, sf_dir, v)
     return (
         e.withColumn("cell", best.getField("cluster"))
         .filter(F.col("cell").isin(probe_ids) & (F.col("vec_id") != 0))
@@ -574,9 +560,6 @@ def _oracle_ann_filtered() -> str:
     )
 
 
-_ANN_INDEX_CACHE: dict[str, str] = {}
-
-
 def save_ann_index(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Persist the trained IVF index as a SERVING artifact: the centroid
     table plus the inverted lists — (vec_id, vector) written PARTITIONED
@@ -607,22 +590,11 @@ def save_ann_index(spark: SparkSession, sf_dir: str, root: str) -> None:
 def _trained_index_inputs(spark: SparkSession, sf_dir: str):
     """(vectors, centroids, gate decision, K) for ``sf_dir``'s corpus —
     the train-once inputs every index build/publication path shares."""
-    from .training import _CENT_CACHE as _KM_CACHE
-    from .training import (
-        _cache_key,
-        kmeans_embeddings,
-        route_gate,
-        trained_k,
-    )
+    from .training import centroids, gate, trained_k
 
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    ckey = _cache_key(spark, sf_dir)
-    if ckey not in _KM_CACHE:
-        kmeans_embeddings(spark, sf_dir)  # trains + caches the centroids
-    cents = _KM_CACHE[ckey]
-    k_int = trained_k(spark, sf_dir, e)
-    routed = route_gate(spark, e, cents, k_int, ckey)
-    return e, cents, bool(routed), k_int
+    cents, routed = centroids(spark, sf_dir), bool(gate(spark, sf_dir))
+    return e, cents, routed, trained_k(spark, sf_dir)
 
 
 def _write_index_version(
@@ -683,7 +655,7 @@ def retrain_ann_index(spark: SparkSession, root: str) -> str:
     left in place for in-flight readers (blue/green); prune them once
     drained with ``prune_ann_index_versions``. Returns the new version
     name."""
-    from .training import _N_CACHE, fit_centroids, kmeans_k, route_gate
+    from .training import fit_centroids, kmeans_k, route_gate
 
     vdir = _resolve_index_dir(spark, root)
     vecs = spark.read.parquet(f"{vdir}/lists").select(
@@ -692,9 +664,7 @@ def retrain_ann_index(spark: SparkSession, root: str) -> str:
     n = vecs.count()
     k_int = kmeans_k(n)
     cents = fit_centroids(spark, vecs, n, k_int)
-    ckey = f"retrain:{root}:{vdir}:{n}"
-    _N_CACHE[ckey] = n  # spare route_gate a second full population count
-    routed = route_gate(spark, vecs, cents, k_int, ckey)
+    routed = route_gate(vecs, cents, k_int, n)
     vname = _next_index_version(spark, root)
     _write_index_version(spark, f"{root}/{vname}", vecs, cents, routed, k_int)
     _publish_index_version(spark, root, vname)
@@ -925,19 +895,15 @@ def compact_ann_index(spark: SparkSession, root: str, max_files: int = 2) -> int
 
 
 
+@artifact
 def _persisted_index_root(spark: SparkSession, sf_dir: str) -> str:
     """The session's persisted IVF index for ``sf_dir`` (saved once,
     shared by every persisted-serving query)."""
     import tempfile
 
-    from .training import _cache_key
-
-    key = f"annidx:{_cache_key(spark, sf_dir)}"
-    if key not in _ANN_INDEX_CACHE:
-        root = tempfile.mkdtemp(prefix="grebi_ann_index_")
-        save_ann_index(spark, sf_dir, root)
-        _ANN_INDEX_CACHE[key] = root
-    return _ANN_INDEX_CACHE[key]
+    root = tempfile.mkdtemp(prefix="grebi_ann_index_")
+    save_ann_index(spark, sf_dir, root)
+    return root
 
 
 def ann_index_persist_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -997,7 +963,7 @@ def _probe_candidates(
         (r["cluster"], r["c"])
         for r in spark.read.parquet(f"{vdir}/centroids").collect()
     ]
-    qv = _query_vector(e, sf_dir)
+    qv = _query_vector(spark, sf_dir)
     probe_ids = _probe_cells(cents, qv, IVF_NPROBE_TRAINED)
     q = F.array(*[F.lit(x) for x in qv])
     lists = spark.read.parquet(f"{vdir}/lists")
@@ -1033,18 +999,18 @@ def ann_retrain_swap_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes the VERSION, not the semantics. Drift-DRIVEN retrains (an
     appended drifted batch actually moving centroids, plus old-reader
     isolation across the swap) are exercised in the suite."""
+    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
+    return _serve_ivf_topk(spark, _retrained_index_root(spark, sf_dir), e, sf_dir)
+
+
+@artifact
+def _retrained_index_root(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
-    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    from .training import _cache_key
-
-    key = f"annretrain:{_cache_key(spark, sf_dir)}"
-    if key not in _ANN_INDEX_CACHE:
-        root = tempfile.mkdtemp(prefix="grebi_ann_bluegreen_")
-        save_ann_index(spark, sf_dir, root)
-        retrain_ann_index(spark, root)
-        _ANN_INDEX_CACHE[key] = root
-    return _serve_ivf_topk(spark, _ANN_INDEX_CACHE[key], e, sf_dir)
+    root = tempfile.mkdtemp(prefix="grebi_ann_bluegreen_")
+    save_ann_index(spark, sf_dir, root)
+    retrain_ann_index(spark, root)
+    return root
 
 
 def ann_stream_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1069,67 +1035,67 @@ def ann_stream_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched cells — never a corpus rewrite. List-content identity and
     no-duplicate-after-restart are suite-asserted
     (tests/test_ann_stream.py)."""
+    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
+    return _serve_ivf_topk(spark, _stream_index_root(spark, sf_dir), e, sf_dir)
+
+
+@artifact
+def _stream_index_root(spark: SparkSession, sf_dir: str) -> str:
     import os
     import tempfile
 
-    from .training import _cache_key
+    root = tempfile.mkdtemp(prefix="grebi_ann_stream_")
+    e_full, cents, routed, k_int = _trained_index_inputs(spark, sf_dir)
+    base = e_full.filter(F.col("vec_id") % 4 != 3)
+    vname = _next_index_version(spark, root)
+    _write_index_version(spark, f"{root}/{vname}", base, cents, routed, k_int)
+    _publish_index_version(spark, root, vname)
 
-    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    key = f"annstream:{_cache_key(spark, sf_dir)}"
-    if key not in _ANN_INDEX_CACHE:
-        root = tempfile.mkdtemp(prefix="grebi_ann_stream_")
-        e_full, cents, routed, k_int = _trained_index_inputs(spark, sf_dir)
-        base = e_full.filter(F.col("vec_id") % 4 != 3)
-        vname = _next_index_version(spark, root)
-        _write_index_version(spark, f"{root}/{vname}", base, cents, routed, k_int)
-        _publish_index_version(spark, root, vname)
+    arrivals = os.path.join(root, "arrivals")
+    ckpt = os.path.join(root, "ckpt")
+    os.makedirs(arrivals)
 
-        arrivals = os.path.join(root, "arrivals")
-        ckpt = os.path.join(root, "ckpt")
-        os.makedirs(arrivals)
+    def land(df: DataFrame, name: str) -> None:
+        # one parquet file per arrival batch: write distributed,
+        # then promote the part file into the watched directory
+        tmp = os.path.join(root, f"tmp_{name}")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = next(
+            f for f in os.listdir(tmp) if f.endswith(".parquet")
+        )
+        os.rename(
+            os.path.join(tmp, part), os.path.join(arrivals, f"{name}.parquet")
+        )
 
-        def land(df: DataFrame, name: str) -> None:
-            # one parquet file per arrival batch: write distributed,
-            # then promote the part file into the watched directory
-            tmp = os.path.join(root, f"tmp_{name}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            )
-            os.rename(
-                os.path.join(tmp, part), os.path.join(arrivals, f"{name}.parquet")
-            )
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        # resolve the lineage id INSIDE the batch: the checkpoint's
+        # metadata (the query id) exists once any batch runs
+        fold_ann_batch(
+            spark,
+            root,
+            batch_df.select("vec_id", "embedding"),
+            batch_id,
+            run_id=ingest_namespace(ckpt),
+        )
 
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            # resolve the lineage id INSIDE the batch: the checkpoint's
-            # metadata (the query id) exists once any batch runs
-            fold_ann_batch(
-                spark,
-                root,
-                batch_df.select("vec_id", "embedding"),
-                batch_id,
-                run_id=ingest_namespace(ckpt),
-            )
+    def drain() -> None:
+        q = (
+            spark.readStream.schema(e_full.schema)
+            .parquet(arrivals)
+            .writeStream.foreachBatch(fold)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
-        def drain() -> None:
-            q = (
-                spark.readStream.schema(e_full.schema)
-                .parquet(arrivals)
-                .writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        land(e_full.filter(F.col("vec_id") % 8 == 3), "arrival_1")
-        drain()
-        land(e_full.filter(F.col("vec_id") % 8 == 7), "arrival_2")
-        drain()  # restart: the committed offset skips arrival_1
-        _ANN_INDEX_CACHE[key] = root
-    return _serve_ivf_topk(spark, _ANN_INDEX_CACHE[key], e, sf_dir)
+    land(e_full.filter(F.col("vec_id") % 8 == 3), "arrival_1")
+    drain()
+    land(e_full.filter(F.col("vec_id") % 8 == 7), "arrival_2")
+    drain()  # restart: the committed offset skips arrival_1
+    return root
 
 
 _RECALL_N_QUERIES = 20
@@ -1266,17 +1232,7 @@ def _pq_tables(spark: SparkSession, sf_dir: str):
     distance to that codeword, computed driver-side with the SAME
     sequential fold + HALF_UP 1e-6 round the oracle's SQL performs
     (K·M scalars, scale-free)."""
-    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    seed_key = f"pq:{spark.sparkContext.applicationId}:{sf_dir}"
-    byid = _IVF_SEED_CACHE.get(seed_key)
-    if byid is None:
-        rows = (
-            e.filter((F.col("vec_id") >= 0) & (F.col("vec_id") <= PQ_K))
-            .select("vec_id", "embedding")
-            .collect()
-        )
-        byid = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in rows}
-        _IVF_SEED_CACHE[seed_key] = byid
+    byid = _seed_vectors(spark, sf_dir, PQ_K)
     qv = byid[0]
     cb = [
         [byid[k + 1][m * PQ_SUB:(m + 1) * PQ_SUB] for k in range(PQ_K)]
@@ -1399,23 +1355,12 @@ def ann_index_drift_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer hash-checks), batch mean under the SAME gate decision —
     exactly the rule ``append_ann_index`` replays from the persisted
     index. One aggregate over each side — scale-free."""
-    from .training import _CENT_CACHE as _KM_CACHE
-    from .training import (
-        _cache_key,
-        assign_by_rule,
-        assign_routed,
-        kmeans_embeddings,
-        route_gate,
-        trained_k,
-    )
+    from .training import assign_by_rule, assign_routed, centroids, gate, trained_k
 
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    ckey = _cache_key(spark, sf_dir)
-    if ckey not in _KM_CACHE:
-        kmeans_embeddings(spark, sf_dir)
-    cents = _KM_CACHE[ckey]
-    k_int = trained_k(spark, sf_dir, e)
-    gate_ok = route_gate(spark, e, cents, k_int, ckey)
+    cents = centroids(spark, sf_dir)
+    k_int = trained_k(spark, sf_dir)
+    gate_ok = gate(spark, sf_dir)
 
     # means via the repo's integer-micron convention (d is rounded to
     # 1e-6, so sum(round(d*1e6)::long)/n/1e6 is EXACT and summation-
@@ -1427,7 +1372,7 @@ def ann_index_drift_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     v = as_double(F.col("embedding"))
-    corpus_d = assign_routed(spark, sf_dir, e, v).getField("d")
+    corpus_d = assign_routed(spark, sf_dir, v).getField("d")
     corpus = e.select(corpus_d.alias("d")).agg(
         _mean_micron(F.col("d")).alias("md")
     )
@@ -1489,9 +1434,6 @@ FROM bm, corpus
     )
 
 
-_PQ_INDEX_CACHE: dict[str, str] = {}
-
-
 def save_pq_index(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Persist the COMPRESSED serving index: the PQ code table
     (vec_id, c0..c3) — 4 small ints standing in for 64 floats, the 64×
@@ -1506,6 +1448,15 @@ def save_pq_index(spark: SparkSession, sf_dir: str, root: str) -> None:
     )
 
 
+@artifact
+def _pq_index_root(spark: SparkSession, sf_dir: str) -> str:
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix="grebi_pq_index_")
+    save_pq_index(spark, sf_dir, root)
+    return root
+
+
 def ann_pq_index_persist_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve PQ top-5 from the PERSISTED code table alone — no vectors
     touched at query time: the query's distance table (K·M scalars,
@@ -1516,15 +1467,7 @@ def ann_pq_index_persist_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist, many queries re-rank the codes); the round-trip must
     reproduce the in-session ``ann_pq_topk`` result exactly — same
     oracle."""
-    import tempfile
-
-    key = f"pqidx:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _PQ_INDEX_CACHE:
-        root = tempfile.mkdtemp(prefix="grebi_pq_index_")
-        save_pq_index(spark, sf_dir, root)
-        _PQ_INDEX_CACHE[key] = root
-    root = _PQ_INDEX_CACHE[key]
-
+    root = _pq_index_root(spark, sf_dir)
     _cb, qd = _pq_tables(spark, sf_dir)
     codes = spark.read.parquet(f"{root}/codes")
     est = F.lit(0.0)
@@ -1558,7 +1501,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     One corpus scan per leg, TakeOrdered each, a 20×20 semi-join to
     intersect."""
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    qv = _query_vector(e, sf_dir)
+    qv = _query_vector(spark, sf_dir)
     q = F.array(*[F.lit(float(x)) for x in qv])
     v = as_double(F.col("embedding"))
     d2 = F.round(
@@ -1792,7 +1735,7 @@ def semantic_dedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = planted_vectors(e).select(
         "vec_id",
         "v",
-        assign_routed(spark, sf_dir, e, F.col("v"))
+        assign_routed(spark, sf_dir, F.col("v"))
         .getField("cluster")
         .alias("cell"),
     )
@@ -1937,19 +1880,16 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from .training import _CENT_CACHE, _cache_key, assign_routed, kmeans_embeddings
+    from .training import assign_routed, centroids
 
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    ckey = _cache_key(spark, sf_dir)
-    if ckey not in _CENT_CACHE:
-        kmeans_embeddings(spark, sf_dir)
-    cents = _CENT_CACHE[ckey]  # [(cluster, centroid)] sorted
+    cents = centroids(spark, sf_dir)  # [(cluster, centroid)] sorted
     cent_of = dict(cents)
-    qv = _query_vector(e, sf_dir)
+    qv = _query_vector(spark, sf_dir)
     # the gated two-level router (n·2√K) instead of the flat n·K argmin —
     # the coarse-quantizer assignment is the one corpus-wide pass here,
     # and the oracle's ``sel`` CTE mirrors the same gate decision
-    cell_col = assign_routed(spark, sf_dir, e, as_double(F.col("embedding")))
+    cell_col = assign_routed(spark, sf_dir, as_double(F.col("embedding")))
 
     from .num import half_up as _r6
 
@@ -1969,16 +1909,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cells from the SAME routed assignment the corpus pass uses — a
     # seed landing differently under routing must shift its codebook
     # entry identically on both sides)
-    seed_key = f"pq:{spark.sparkContext.applicationId}:{sf_dir}"
-    byid = _IVF_SEED_CACHE.get(seed_key)
-    if byid is None:
-        rows = (
-            e.filter((F.col("vec_id") >= 0) & (F.col("vec_id") <= PQ_K))
-            .select("vec_id", "embedding")
-            .collect()
-        )
-        byid = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in rows}
-        _IVF_SEED_CACHE[seed_key] = byid
+    byid = _seed_vectors(spark, sf_dir, PQ_K)
     seed_cells = {
         int(r["vec_id"]): int(r["cell"])
         for r in e.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= PQ_K))

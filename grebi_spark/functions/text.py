@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact
 from ..session import load_tables
 
 TOKEN_RE = r"\S+"
@@ -1238,10 +1239,8 @@ GROUP BY f.source ORDER BY f.source
 
 LM_TOP_BIGRAMS = 1000
 
-_BIGRAM_CACHE: dict[str, DataFrame] = {}
-
-
-def _bigram_rows(spark: SparkSession, sf_dir: str, d: DataFrame) -> DataFrame:
+@artifact
+def _bigram_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exploded (doc_id, bigram) pass behind the LM novelty gate —
     spread across cores first (the documents file arrives as a single
     split) and persisted: the vocabulary election AND the per-doc pass
@@ -1249,9 +1248,7 @@ def _bigram_rows(spark: SparkSession, sf_dir: str, d: DataFrame) -> DataFrame:
     (bench/soak) reuse one persisted copy instead of stacking a fresh
     persist's blocks in executor storage per invocation (the
     dedup._lsh_pairs / graph_analytics._ranked_adjacency contract)."""
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _BIGRAM_CACHE:
-        return _BIGRAM_CACHE[key]
+    d = load_tables(spark, sf_dir, ("documents",))["documents"]
     t = tokens(F.col("text"))
     bigrams = F.when(
         F.size(t) >= 2,
@@ -1263,13 +1260,11 @@ def _bigram_rows(spark: SparkSession, sf_dir: str, d: DataFrame) -> DataFrame:
         ),
     ).otherwise(F.array().cast("array<string>"))
     par = spark.sparkContext.defaultParallelism
-    rows = (
+    return (
         d.repartition(par, "doc_id")
         .select("doc_id", F.explode(bigrams).alias("bg"))
         .persist()
     )
-    _BIGRAM_CACHE[key] = rows
-    return rows
 LM_NOVELTY_GATE_PCT = 50
 
 
@@ -1293,7 +1288,7 @@ def lm_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-doc pass — never doc×doc, never a corpus-side shuffle
     beyond the per-doc aggregate."""
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    rows = _bigram_rows(spark, sf_dir, d)
+    rows = _bigram_rows(spark, sf_dir)
     vocab = (
         rows.groupBy("bg")
         .agg(F.count("*").alias("n"))

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact
 from ..session import load_tables, scratch_dir
 from .num import half_up, half_up_np
 
@@ -173,15 +174,6 @@ KMEANS_TARGET_CELL = 64
 def kmeans_k(n: int) -> int:
     """K for an n-vector corpus: ceil(n / TARGET_CELL), floored at MIN."""
     return max(KMEANS_K_MIN, -(-n // KMEANS_TARGET_CELL))
-
-# trained centroids per (application, sf_dir) — applicationId (not
-# id(spark)) so a restarted session can never be served DataFrame-free
-# floats from a dead context, and a new session retrains
-_CENT_CACHE: dict[str, list[tuple[int, list[float]]]] = {}
-
-
-def _cache_key(spark: SparkSession, sf_dir: str) -> str:
-    return f"{spark.sparkContext.applicationId}:{sf_dir}"
 
 
 def _euclid_dist(a: Column, b: Column) -> Column:
@@ -374,13 +366,6 @@ def train_sample(e: DataFrame, n: int, k_int: int) -> DataFrame:
     return e.filter(sample_member(F.col("vec_id"), _samp_thr(n, k_int)))
 
 
-# gate decision per (application, sf_dir); K and corpus count at train
-# time per same key
-_GATE_CACHE: dict[str, bool] = {}
-_K_CACHE: dict[str, int] = {}
-_N_CACHE: dict[str, int] = {}
-
-
 def _twolevel_parts(cents: list[tuple[int, list[float]]], k_int: int):
     """Coarse structure for two-level routing: group fine centroids by
     cluster_id // G (G=⌈√K⌉ of the INTENDED K — id-blocked grouping,
@@ -470,10 +455,10 @@ def _assign_twolevel(vec: Column, cents: list[tuple[int, list[float]]], k_int: i
     return pandas_udf(_routed, schema)(vec)
 
 
-def route_gate(spark: SparkSession, e: DataFrame, cents: list[tuple[int, list[float]]],
-               k_int: int, ckey: str) -> bool:
-    """Evaluate (once per session+corpus) the sampled-agreement gate on
-    the TRAINING SAMPLE (expected 16·K vectors — the same md5-bucket
+def route_gate(e: DataFrame, cents: list[tuple[int, list[float]]],
+               k_int: int, n: int) -> bool:
+    """Evaluate the sampled-agreement gate of the ``n``-vector corpus
+    ``e`` on its TRAINING SAMPLE (expected 16·K vectors — the same md5-bucket
     sample Lloyd fits on): compare routed vs exact assignment; accept
     the routed path when K ≥ KMEANS_ROUTE_MIN_K and agreement ≥
     KMEANS_ROUTE_MIN_AGREE — and UNCONDITIONALLY once K exceeds
@@ -481,8 +466,6 @@ def route_gate(spark: SparkSession, e: DataFrame, cents: list[tuple[int, list[fl
     itself infeasible. Cost is sample·K (GEMM-batched), bounded by the
     sample — never a corpus-wide exact pass. The oracle's ``gate`` CTE
     computes the identical decision in SQL."""
-    if ckey in _GATE_CACHE:
-        return _GATE_CACHE[ckey]
     accept = k_int > KMEANS_FLAT_MAX_K
     if not accept and k_int >= KMEANS_ROUTE_MIN_K:
         import numpy as np
@@ -503,10 +486,6 @@ def route_gate(spark: SparkSession, e: DataFrame, cents: list[tuple[int, list[fl
             [T.StructField("two", T.LongType()), T.StructField("exact", T.LongType())]
         )
         udf = pandas_udf(_both, schema)
-        n = _N_CACHE.get(ckey)
-        if n is None:
-            n = e.count()
-            _N_CACHE[ckey] = n
         row = (
             train_sample(e, n, k_int)
             .select(udf(_as_double(F.col("embedding"))).alias("z"))
@@ -520,21 +499,36 @@ def route_gate(spark: SparkSession, e: DataFrame, cents: list[tuple[int, list[fl
             row["n_eval"] > 0
             and row["n_agree"] >= KMEANS_ROUTE_MIN_AGREE * row["n_eval"]
         )
-    _GATE_CACHE[ckey] = accept
     return accept
 
 
-def trained_k(spark: SparkSession, sf_dir: str, e: DataFrame) -> int:
-    """K as derived (and cached) at train time for this (session, sf) —
-    the single source of the K-recovery logic every consumer shares."""
-    ckey = _cache_key(spark, sf_dir)
-    k_int = _K_CACHE.get(ckey)
-    if k_int is None:
-        n = e.count()
-        _N_CACHE[ckey] = n
-        k_int = kmeans_k(n)
-        _K_CACHE[ckey] = k_int
-    return k_int
+@artifact
+def corpus_n(spark: SparkSession, sf_dir: str) -> int:
+    """The embeddings corpus count, taken once per (session, sf)."""
+    return load_tables(spark, sf_dir, ("embeddings",))["embeddings"].count()
+
+
+def trained_k(spark: SparkSession, sf_dir: str) -> int:
+    """K as derived at train time for this (session, sf) — the single
+    source of the K-recovery logic every consumer shares."""
+    return kmeans_k(corpus_n(spark, sf_dir))
+
+
+@artifact
+def centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[float]]]:
+    """The trained centroids per (session, sf) — a new session retrains."""
+    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
+    n = corpus_n(spark, sf_dir)
+    return fit_centroids(spark, e, n, kmeans_k(n))
+
+
+@artifact
+def gate(spark: SparkSession, sf_dir: str) -> bool:
+    """The routing gate decision per (session, sf)."""
+    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
+    return route_gate(
+        e, centroids(spark, sf_dir), trained_k(spark, sf_dir), corpus_n(spark, sf_dir)
+    )
 
 
 def assign_by_rule(
@@ -559,17 +553,12 @@ def assign_by_rule(
     return _assign_twolevel(vec, cents, k_int) if routed else _assign(vec, cents)
 
 
-def assign_routed(spark: SparkSession, sf_dir: str, e: DataFrame, vec: Column) -> Column:
+def assign_routed(spark: SparkSession, sf_dir: str, vec: Column) -> Column:
     """THE production assignment entry point: two-level routed when the
     sampled-agreement gate accepts, exact flat (GEMM+refine) when it
     rejects. Both legs and the decision are mirrored in the oracle."""
-    ckey = _cache_key(spark, sf_dir)
-    if ckey not in _CENT_CACHE:
-        kmeans_embeddings(spark, sf_dir)
-    cents = _CENT_CACHE[ckey]
-    k_int = trained_k(spark, sf_dir, e)
     return assign_by_rule(
-        vec, cents, route_gate(spark, e, cents, k_int, ckey), k_int
+        vec, centroids(spark, sf_dir), gate(spark, sf_dir), trained_k(spark, sf_dir)
     )
 
 
@@ -630,19 +619,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     the integer-micron distance sum are hash-stable."""
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     v = _as_double(F.col("embedding"))
-
-    ckey = _cache_key(spark, sf_dir)
-    if ckey in _CENT_CACHE:
-        cent2 = _CENT_CACHE[ckey]
-    else:
-        n = e.count()
-        _N_CACHE[ckey] = n
-        k = kmeans_k(n)
-        _K_CACHE[ckey] = k
-        cent2 = fit_centroids(spark, e, n, k)
-        _CENT_CACHE[ckey] = cent2
-
-    best = assign_routed(spark, sf_dir, e, v)
+    best = assign_routed(spark, sf_dir, v)
     return (
         e.select(
             best.getField("cluster").alias("cluster"),
@@ -828,16 +805,13 @@ def kmeans_assign_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    ckey = _cache_key(spark, sf_dir)
-    if ckey not in _CENT_CACHE:
-        kmeans_embeddings(spark, sf_dir)
-    cents = sorted(_CENT_CACHE[ckey])
+    cents = sorted(centroids(spark, sf_dir))
     # G derives from the INTENDED K (kmeans_k of the corpus count, the
     # oracle's kk CTE), and grouping keys on cluster_id // G — NOT on
     # position in the centroid list — so both stay identical to the
     # oracle even if a Lloyd step left a cluster empty (cent2 then has
     # id gaps and positional grouping would diverge)
-    k_int = _K_CACHE.get(ckey) or kmeans_k(e.count())
+    k_int = trained_k(spark, sf_dir)
     _, kid, C, _, CO, fine_idx = _twolevel_parts(cents, k_int)
 
     # the exact-argmin reference costs the very n·K the two-level path
@@ -864,10 +838,7 @@ def kmeans_assign_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
         [T.StructField("two", T.LongType()), T.StructField("exact", T.LongType())]
     )
     udf = pandas_udf(_route, schema)
-    n_corpus = _N_CACHE.get(ckey)
-    if n_corpus is None:
-        n_corpus = e.count()
-        _N_CACHE[ckey] = n_corpus
+    n_corpus = corpus_n(spark, sf_dir)
     member = sample_member(F.col("vec_id"), _samp_thr(n_corpus, k_int))
     a = e.select(
         "vec_id", udf(_as_double(F.col("embedding")), member).alias("z")
@@ -1039,8 +1010,6 @@ FROM m GROUP BY source ORDER BY source
 
 _SHARD_MAX_RECORDS = 200
 
-_SHARD_CACHE: dict[str, str] = {}
-
 
 def write_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write the corpus as split-segregated training shards and prove
@@ -1056,7 +1025,21 @@ def write_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     (so downstream training jobs partition-prune to their split), and
     maxRecordsPerFile splits oversized partitions without a second
     shuffle."""
+    back = spark.read.parquet(_training_shards(spark, sf_dir))
+    return (
+        back.groupBy("split")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_chars").alias("n_chars"),
+            F.min("doc_id").alias("min_doc"),
+            F.max("doc_id").alias("max_doc"),
+        )
+        .orderBy("split")
+    )
 
+
+@artifact
+def _training_shards(spark: SparkSession, sf_dir: str) -> str:
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     bucket = F.conv(
         F.substring(
@@ -1070,30 +1053,15 @@ def write_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(bucket < _SPLIT_BOUNDS[1][1], _SPLIT_BOUNDS[1][0])
         .otherwise(_SPLIT_BOUNDS[2][0])
     )
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _SHARD_CACHE:
-        out_dir = _SHARD_CACHE[key]
-    else:
-        out_dir = scratch_dir("grebi_shards_")
-        (
-            d.withColumn("split", split)
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", _SHARD_MAX_RECORDS)
-            .partitionBy("split")
-            .parquet(out_dir)
-        )
-        _SHARD_CACHE[key] = out_dir
-    back = spark.read.parquet(out_dir)
-    return (
-        back.groupBy("split")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("n_chars"),
-            F.min("doc_id").alias("min_doc"),
-            F.max("doc_id").alias("max_doc"),
-        )
-        .orderBy("split")
+    out_dir = scratch_dir("grebi_shards_")
+    (
+        d.withColumn("split", split)
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", _SHARD_MAX_RECORDS)
+        .partitionBy("split")
+        .parquet(out_dir)
     )
+    return out_dir
 
 
 # the shards must contain exactly what the split decision dictates —
@@ -1744,7 +1712,6 @@ GROUP BY d.lang ORDER BY d.lang
 
 _COMPACT_CAP = 500      # records per file in the fragmented stage
 _COMPACT_TARGET = 4     # compacted output file count
-_COMPACT_CACHE: dict[str, tuple[int, int, int, int]] = {}
 
 
 def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1770,35 +1737,38 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     read of the fragmented stage is the expensive half — which is the
     point of doing the compaction.
     """
-    import glob
-
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _COMPACT_CACHE:
-        d = load_tables(spark, sf_dir, ("documents",))["documents"]
-        frag = scratch_dir("grebi_frag_")
-        comp = scratch_dir("grebi_comp_")
-        (
-            d.repartition(1)
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", _COMPACT_CAP)
-            .parquet(frag)
-        )
-        staged = spark.read.parquet(frag)
-        (
-            staged.repartition(_COMPACT_TARGET)
-            .write.mode("overwrite")
-            .parquet(comp)
-        )
-        n_frag_files = len(glob.glob(f"{frag}/*.parquet"))
-        n_comp_files = len(glob.glob(f"{comp}/*.parquet"))
-        n_frag_rows = spark.read.parquet(frag).count()
-        n_comp_rows = spark.read.parquet(comp).count()
-        _COMPACT_CACHE[key] = (n_frag_files, n_frag_rows, n_comp_files, n_comp_rows)
-    ff, fr, cf, cr = _COMPACT_CACHE[key]
+    ff, fr, cf, cr = _compaction_counts(spark, sf_dir)
     return spark.createDataFrame(
         [("compacted", cf, cr), ("fragmented", ff, fr)],
         "stage string, n_files bigint, n_rows bigint",
     ).orderBy("stage")
+
+
+@artifact
+def _compaction_counts(spark: SparkSession, sf_dir: str) -> tuple[int, int, int, int]:
+    """(fragmented files, rows, compacted files, rows), read from disk."""
+    import glob
+
+    d = load_tables(spark, sf_dir, ("documents",))["documents"]
+    frag = scratch_dir("grebi_frag_")
+    comp = scratch_dir("grebi_comp_")
+    (
+        d.repartition(1)
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", _COMPACT_CAP)
+        .parquet(frag)
+    )
+    staged = spark.read.parquet(frag)
+    (
+        staged.repartition(_COMPACT_TARGET)
+        .write.mode("overwrite")
+        .parquet(comp)
+    )
+    n_frag_files = len(glob.glob(f"{frag}/*.parquet"))
+    n_comp_files = len(glob.glob(f"{comp}/*.parquet"))
+    n_frag_rows = spark.read.parquet(frag).count()
+    n_comp_rows = spark.read.parquet(comp).count()
+    return n_frag_files, n_frag_rows, n_comp_files, n_comp_rows
 
 
 compact_small_files.__doc__ = compact_small_files.__doc__.format(

@@ -45,13 +45,15 @@ def id_score(col: Column) -> Column:
     )
 
 
-# Label tables at or under this row count take the broadcast round (the
-# whole per-round update as ONE shuffle + two map-side hash joins against
-# the broadcast labels); larger graphs keep the shuffle-join round. The
-# guard is exact (a count of the materialized init frame), the same
-# pattern as graph_analytics.max_part_key: fast path only when provably
-# safe, identical results either way.
-_CC_BCAST_MAX_LABELS = 2_000_000
+# Label tables whose estimated size is at most this many bytes take the
+# broadcast round (the whole per-round update as ONE shuffle + two
+# map-side hash joins against the broadcast labels); larger graphs keep
+# the shuffle-join round. The labels are string PAIRS, so the guard sizes
+# them in bytes, not rows, and uses the session's broadcast-join
+# threshold. The guard is exact (one aggregate over the materialized init
+# frame), the same pattern as graph_analytics.max_part_key: fast path
+# only when provably safe, identical results either way.
+_CC_BCAST_MAX_BYTES = 64 * 1024 * 1024
 
 
 def connected_components(
@@ -77,14 +79,18 @@ def connected_components(
         .localCheckpoint()
     )
 
-    # Broadcast fast path guard: the label table is |V|-sized; counting
+    # Broadcast fast path guard: the label table is |V|-sized; sizing
     # the just-materialized checkpoint is one cheap job. (The r8/r9
     # profiling showed the loop is sequential-stage-latency-bound, not
     # data-bound: each shuffle-join round runs ~4 AQE stages back to
     # back. Broadcasting the labels turns the propagate join and the
     # pointer jump into map-side probes — one shuffle stage per round.)
-    n_labels = labels.count()
-    bcast = n_labels <= _CC_BCAST_MAX_LABELS
+    n_labels, n_chars = labels.agg(
+        F.count("*"), F.sum(F.length("id") + F.length("component"))
+    ).collect()[0]
+    # per row, an UnsafeRow of two strings carries an 8-byte null bitset
+    # and two 8-byte offset/length slots ahead of the string bytes
+    bcast = 24 * n_labels + (n_chars or 0) <= _CC_BCAST_MAX_BYTES
 
     prev_mat = None  # previous round's materialized frame (for unpersist)
     for i in range(max_iterations):

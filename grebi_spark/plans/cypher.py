@@ -10,8 +10,7 @@ Supported subset (everything in queries/*.cypher and the read paths of
 the notebooks/*.ipynb queries):
 - MATCH chains: ``(a:`L`)-[r:`T`]->(b)``, both directions, undirected
   ``-[r]-``, anonymous nodes/edges, multi-MATCH, ``p = (...)`` path
-  assignment (path var ignored), node property pattern ``{id: "..."}``
-  or ``{id: $param}``, the universal ``GraphNode`` label
+  assignment (path var ignored), the universal ``GraphNode`` label
 - edge-type alternation ``[:(`A`|`B`)]`` / ``[r:`A`|`B`]``
   (notebooks/gwas.ipynb, notebooks/prolactin.ipynb)
 - edge variables: ``type(r)``, ``r.`grebi:datasources```, reified edge
@@ -23,7 +22,9 @@ the notebooks/*.ipynb queries):
 - variable-length paths ``-[:`T`*1..]->`` / ``*1..n`` (compiled to the
   path-doubling transitive closure in plans.closure —
   notebooks/ic_scores.ipynb uses ``[:`biolink:broad_match`*1..]``)
-- the id-resolution idiom ``(d)-[:id]->(x:Id {id: "v"})``;
+- the id-resolution idiom ``(d)-[:id]->(x:Id {id: "v"})`` (or
+  ``{id: $param}``), the only place a node property pattern is
+  accepted — any other ``{id: ...}`` raises ``ValueError``;
   ``USING INDEX`` hints are accepted and ignored (Catalyst plans access)
 - WHERE: ``v.`p` IS NOT NULL``, ``"lit" IN v.`p```,
   ``toFloat(v.`p`[0]) <op> <num>``, ``v.`p`[0] <op> "lit"``
@@ -535,15 +536,24 @@ class _Planner:
         """Bind the query's MATCH patterns and WHEREs onto self.df."""
         q = self.q
         # id-resolution idiom: edges [:id] to an Id-labelled constrained var
-        resolved_edges = []
-        for (a, etype, b, direction, hops, evar) in q.edges:
+        resolved_edges, id_vars = [], []
+        for (a, etype, b, *_) in q.edges:
             id_var = None
             if etype == ("id",):
                 if q.node_labels.get(b) == "Id" and b in q.node_id_constraints:
-                    id_var, other = b, a
+                    id_var = b
                 elif q.node_labels.get(a) == "Id" and a in q.node_id_constraints:
-                    id_var, other = a, b
+                    id_var = a
+            id_vars.append(id_var)
+        stray = sorted(set(q.node_id_constraints) - set(id_vars))
+        if stray:
+            raise ValueError(
+                f"node property pattern {{id: ...}} on ({stray[0]}) is only "
+                'supported in the id-resolution idiom (n)-[:id]->(x:Id {id: "..."})'
+            )
+        for (a, etype, b, direction, hops, evar), id_var in zip(q.edges, id_vars):
             if id_var:
+                other = b if id_var == a else a
                 alias_val = q.node_id_constraints[id_var]
                 cands = self.graph.nodes.filter(
                     F.array_contains("source_ids", alias_val)

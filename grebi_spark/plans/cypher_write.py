@@ -272,17 +272,15 @@ def run_cypher_mutation(
         # rows are a pure function of `bound` and re-running the whole
         # MATCH (for `SET ancestor.num_desc` that is the full var-length
         # closure, the statement's dominant cost — guide §1.2: don't
-        # compute things twice) is redundant: evaluate the RETURN items
-        # over the bound rows directly. Anything this subset cannot
-        # express falls back to the second planner run.
-        if bare_alias is not None:
-            try:
-                result = bound.withColumnRenamed("__value", bare_alias).selectExpr(
-                    *[s.strip() for s in ret_items.split(",")]
-                )
-            except Exception:
-                result = None
-        if result is None:
+        # compute things twice) is redundant: project the bound rows
+        # directly. Only items that are exactly ``alias`` or ``alias AS
+        # name`` take this path — any expression (``alias + 'x'`` has
+        # Cypher semantics Spark SQL does not share) goes to the planner.
+        ret_list = [it.strip() for it in ret_items.split(",")]
+        plain = rf"{re.escape(bare_alias or '')}(?:\s+(?i:AS)\s+[A-Za-z_]\w*)?"
+        if bare_alias is not None and all(re.fullmatch(plain, it) for it in ret_list):
+            result = bound.withColumnRenamed("__value", bare_alias).selectExpr(*ret_list)
+        else:
             result = run_cypher(graph, prefix + " " + stripped[m.end():].strip())
     return MutationResult(graph=new_graph, result=result)
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact
 from ..session import load_tables
 
 # fixed-point scale: 1.0 of rank mass == 10^9. Headroom argument: the
@@ -47,10 +48,8 @@ _PR_TOPK = 20
 # symmetric list is a narrow no-shuffle union of it. Cached per
 # (session, sf_dir); localCheckpoint so it survives
 # catalog.clearCache() like an on-disk stage output would (the same
-# contract as dedup._lsh_pairs and parity._merged).
-_EDGES_CACHE: dict[str, DataFrame] = {}
-
-
+# contract as dedup._lsh_pairs and parity._built_graph).
+@artifact
 def weighted_half_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oriented co-purchase edge list WITH multiplicity (u < v, w =
     co-occurrence count, wd = DISTINCT shared orders): ONE lineitem
@@ -67,15 +66,12 @@ def weighted_half_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join per variant (guide §2.4: two operations keyed the same
     way share one exchange; here they share the whole projection
     build)."""
-    key = f"whalf:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _EDGES_CACHE:
-        return _EDGES_CACHE[key]
     li = (
         load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
         .select("l_orderkey", "l_partkey")
     )
     a, b = li.alias("a"), li.alias("b")
-    half = (
+    return (
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -91,8 +87,6 @@ def weighted_half_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    _EDGES_CACHE[key] = half
-    return half
 
 
 def copurchase_half_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,19 +97,14 @@ def copurchase_half_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_half_edges(spark, sf_dir).select("u", "v")
 
 
-_MAX_KEY_CACHE: dict[str, int] = {}
-
-
+@artifact
 def max_part_key(spark: SparkSession, sf_dir: str) -> int:
     """Largest vertex id in the co-purchase projection — one cheap scan
     of the checkpointed artifact, cached per (session, sf_dir). Lets
     consumers choose id-packing fast paths (single-long join keys) with
     an exact guard instead of assuming an id range."""
-    key = f"maxkey:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _MAX_KEY_CACHE:
-        row = weighted_half_edges(spark, sf_dir).agg(F.max("v")).collect()
-        _MAX_KEY_CACHE[key] = int(row[0][0] or 0)
-    return _MAX_KEY_CACHE[key]
+    row = weighted_half_edges(spark, sf_dir).agg(F.max("v")).collect()
+    return int(row[0][0] or 0)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,24 +147,20 @@ def _walk_hash_spark(start, i: int):
     ).cast("long")
 
 
+@artifact
 def _ranked_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(u, v, rank-in-id-order, degree) — built once per (session,
     sf_dir) and localCheckpoint-backed like the edge artifact it is
     derived from, so repeated walk queries neither redo the two window
     shuffles nor stack persisted copies in executor storage."""
-    key = f"adj:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _EDGES_CACHE:
-        return _EDGES_CACHE[key]
     edges = _copurchase_edges(spark, sf_dir)
     w = Window.partitionBy("u").orderBy("v")
-    adj = edges.select(
+    return edges.select(
         "u",
         "v",
         F.row_number().over(w).alias("rk"),
         F.count("*").over(Window.partitionBy("u")).alias("deg"),
     ).localCheckpoint()
-    _EDGES_CACHE[key] = adj
-    return adj
 
 
 def graph_walk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

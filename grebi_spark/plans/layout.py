@@ -34,6 +34,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact
 from ..session import load_tables
 
 Z_BITS = 4  # per dimension → 16×16 = 256 cells
@@ -71,15 +72,13 @@ def _interleave_py(ub: int, db: int) -> int:
     return z
 
 
+@artifact
 def _bounds(spark: SparkSession, sf_dir: str) -> dict:
     """min/max of both z dimensions plus the derived query rectangle —
     four bounded scalars off one aggregate, computed once per
     (session, sf_dir); the oracle recomputes the same numbers in its
     CTE. Without the cache every pruned-scan call would pay a full
     events aggregate scan that dwarfs the pruned read itself."""
-    key = f"bounds:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _LAYOUT_CACHE:
-        return _LAYOUT_CACHE[key]
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     row = ev.select(
         F.min("user_id").alias("mu"),
@@ -89,18 +88,13 @@ def _bounds(spark: SparkSession, sf_dir: str) -> dict:
     ).collect()[0]
     mu, xu, md, xd = int(row["mu"]), int(row["xu"]), int(row["md"]), int(row["xd"])
     su, sd = xu - mu + 1, xd - md + 1
-    out = {
+    return {
         "mu": mu, "xu": xu, "md": md, "xd": xd,
         # the deterministic query rectangle: the second quarter of each
         # dimension's span (non-degenerate at every harness sf)
         "u1": mu + su // 4, "u2": mu + su // 2,
         "d1": md + sd // 4, "d2": md + sd // 2,
     }
-    _LAYOUT_CACHE[key] = out
-    return out
-
-
-_LAYOUT_CACHE: dict[str, object] = {}
 
 
 def _layout_z_expr(bins: dict) -> str:
@@ -215,17 +209,14 @@ def compact_layout(spark: SparkSession, root: str, max_files: int = 2) -> int:
     return len(crowded)
 
 
+@artifact
 def _zorder_root(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
     """The session's shared z-layout over the WHOLE events table, plus
     the query-rectangle bounds."""
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
     b = _bounds(spark, sf_dir)
-    if key in _LAYOUT_CACHE:
-        return _LAYOUT_CACHE[key], b
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     root = tempfile.mkdtemp(prefix="grebi_zorder_")
     _write_layout(spark, ev, root, bins=b)  # _bounds already scanned
-    _LAYOUT_CACHE[key] = root
     return root, b
 
 
@@ -335,14 +326,12 @@ FROM events GROUP BY 1 ORDER BY z
 """
 
 
+@artifact
 def _cell_catalog_root(spark: SparkSession) -> str:
     """The cell CATALOG — one row per z cell with its bucket
     coordinates (z, ub, db). Universe-sized (256 rows), written once
     per session: the dimension table a runtime-pruned query joins
     instead of carrying a literal IN list."""
-    key = f"catalog:{spark.sparkContext.applicationId}"
-    if key in _LAYOUT_CACHE:
-        return _LAYOUT_CACHE[key]
     root = tempfile.mkdtemp(prefix="grebi_zcatalog_")
     spark.createDataFrame(
         [
@@ -352,7 +341,6 @@ def _cell_catalog_root(spark: SparkSession) -> str:
         ],
         "z int, ub int, db int",
     ).coalesce(1).write.mode("overwrite").parquet(root)
-    _LAYOUT_CACHE[key] = root
     return root
 
 
@@ -401,16 +389,7 @@ def zorder_append_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     result hash-matches the SAME full-scan oracle as
     ``zorder_scan_prune`` — appending must change what is read, never
     the answer."""
-    key = f"appendlayout:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _LAYOUT_CACHE:
-        ev = load_tables(spark, sf_dir, ("events",))["events"]
-        root = tempfile.mkdtemp(prefix="grebi_zorder_append_")
-        bins = _write_layout(spark, ev.filter(F.col("event_id") % 4 != 3), root)
-        zorder_append(spark, root, ev.filter(F.col("event_id") % 4 == 3))
-        # cache the bins WITH the root: _layout_meta is immutable, and
-        # re-reading a 1-row parquet per timed call is a wasted job
-        _LAYOUT_CACHE[key] = (root, bins)
-    root, bins = _LAYOUT_CACHE[key]
+    root, bins = _append_layout(spark, sf_dir)
     b = _bounds(spark, sf_dir)  # the rect comes from the FULL table
     cover = _z_cover(b, bins)
     day = F.expr(_DAY_SPARK)
@@ -430,12 +409,24 @@ def zorder_append_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@artifact
+def _append_layout(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
+    ev = load_tables(spark, sf_dir, ("events",))["events"]
+    root = tempfile.mkdtemp(prefix="grebi_zorder_append_")
+    bins = _write_layout(spark, ev.filter(F.col("event_id") % 4 != 3), root)
+    zorder_append(spark, root, ev.filter(F.col("event_id") % 4 == 3))
+    # cache the bins WITH the root: _layout_meta is immutable, and
+    # re-reading a 1-row parquet per timed call is a wasted job
+    return root, bins
+
+
 # --- manifest-based file skipping (min/max statistics pruning) ---------------
 
 _CENTS = "CAST(round(value * 100) AS BIGINT)"
 _MANIFEST_FILES = 16
 
 
+@artifact
 def _manifest_root(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     """The OTHER half of the data-skipping story: file-level MIN/MAX
     statistics on an ordinary (un-partitioned) column — what
@@ -446,9 +437,6 @@ def _manifest_root(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     (file → min/max cents, row count). The manifest is file-count-sized
     — the bounded planning metadata a 100 TB table keeps in its
     catalog, NOT data-sized."""
-    key = f"manifest:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _LAYOUT_CACHE:
-        return _LAYOUT_CACHE[key]
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     root = tempfile.mkdtemp(prefix="grebi_manifest_")
     (
@@ -470,7 +458,6 @@ def _manifest_root(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     # the layout is immutable once written, so the manifest is cached
     # WITH it — re-collecting stats per query would be a full scan that
     # defeats the pruning being demonstrated
-    _LAYOUT_CACHE[key] = (root, manifest)
     return root, manifest
 
 
@@ -515,13 +502,11 @@ def manifest_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@artifact
 def _cents_rect(spark: SparkSession, sf_dir: str) -> dict:
     """Deterministic query interval: the second quarter of the cents
     span — same convention as the z-order rectangle; two scalars,
     computed once per (session, sf_dir)."""
-    key = f"cents_rect:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _LAYOUT_CACHE:
-        return _LAYOUT_CACHE[key]
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     row = ev.select(
         F.expr(f"min({_CENTS})").alias("mc"),
@@ -529,9 +514,7 @@ def _cents_rect(spark: SparkSession, sf_dir: str) -> dict:
     ).collect()[0]
     mc, xc = int(row["mc"]), int(row["xc"])
     span = xc - mc + 1
-    out = {"c1": mc + span // 4, "c2": mc + span // 2}
-    _LAYOUT_CACHE[key] = out
-    return out
+    return {"c1": mc + span // 4, "c2": mc + span // 2}
 
 
 ORACLE_MANIFEST_SCAN = """

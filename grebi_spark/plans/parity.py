@@ -15,6 +15,7 @@ from ..config import SubgraphConfig
 from ..operators.groups import build_groups
 from ..operators.materialise import materialise_edges
 from ..operators.merge import node_table
+from ..artifacts import artifact
 from ..session import load_tables
 
 PARITY_CONFIG = SubgraphConfig(
@@ -84,33 +85,9 @@ def _star_graph_long(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     return [customers, nations, regions]
 
 
-# The reference separates graph BUILD (the 01–06 ETL, run once) from
-# graph QUERY (08_run_queries against the built Neo4j). Mirror that:
-# the built star graph is materialized once per (session, sf_dir) and
-# every downstream query reads the artifact — rebuilding the ETL per
-# query would be benchmarking the wrong thing. localCheckpoint survives
-# spark.catalog.clearCache(), matching "the built graph is on disk".
-_MERGED_CACHE: dict[str, DataFrame] = {}
-
-
-def _merged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The merged long form of the ONE built star graph — since the
-    Cypher surface needs the full BuiltGraph anyway, every parity query
-    reads from the same single build (one ETL per session+sf, exactly
-    the reference's build-once/query-many split)."""
-    # applicationId, not id(spark): a restarted session must rebuild, and
-    # a recycled object address must never resurrect a dead checkpoint
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _MERGED_CACHE:
-        return _MERGED_CACHE[key]
-    merged = _built_graph(spark, sf_dir).merged
-    _MERGED_CACHE[key] = merged
-    return merged
-
-
 def graph_merge_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Melt → assign → merge; per node: distinct prop count + provenance."""
-    merged = _merged(spark, sf_dir)
+    merged = _built_graph(spark, sf_dir).merged
     return (
         merged.groupBy("node_id")
         .agg(
@@ -156,7 +133,7 @@ def graph_edges_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialised edges of the star graph: property values that are ids
     of existing nodes become edges (J5's semi-join-with-payload), counted
     by (edge_type, to_id)."""
-    merged = _merged(spark, sf_dir)
+    merged = _built_graph(spark, sf_dir).merged
     meta = node_table(merged)
     edges = materialise_edges(merged, meta, PARITY_CONFIG)
     return (
@@ -185,15 +162,10 @@ SELECT * FROM (
 # graph by contract) — one events scan + json-extract + distinct per
 # session instead of one per variant; checkpointed like every other
 # stage artifact so it survives the bench's per-query clearCache()
-_EQUIV_PAIRS_CACHE: dict[str, DataFrame] = {}
-
-
+@artifact
 def _equiv_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _EQUIV_PAIRS_CACHE:
-        return _EQUIV_PAIRS_CACHE[key]
     e = load_tables(spark, sf_dir, ("events",))["events"]
-    pairs = (
+    return (
         e.filter(F.col("value") > 180)
         .select(
             F.concat(F.lit("u:"), F.col("user_id").cast("string")).alias("src"),
@@ -202,8 +174,6 @@ def _equiv_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    _EQUIV_PAIRS_CACHE[key] = pairs
-    return pairs
 
 
 def equivalence_groups_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,7 +341,7 @@ def neo4j_nodes_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     property) is deterministic and a pure-SQL oracle can rebuild it."""
     from ..sinks.neo4j_csv import neo4j_node_rows
 
-    merged = _merged(spark, sf_dir)
+    merged = _built_graph(spark, sf_dir).merged
     meta = node_table(merged)
     return neo4j_node_rows(merged, meta).orderBy("grebi:nodeId:ID")
 
@@ -453,21 +423,18 @@ FROM rewritten GROUP BY entity_id ORDER BY entity_id
 """
 
 
-# full BuiltGraph artifact per (session, sf_dir) — the Cypher surface
-# queries the BUILT graph, exactly like 08_run_queries hits the built
-# Neo4j, never the ETL
-_BUILT_CACHE: dict[str, object] = {}
-
-
+# The reference separates graph BUILD (the 01–06 ETL, run once) from
+# graph QUERY (08_run_queries against the built Neo4j). Mirror that:
+# the full BuiltGraph is materialized once per (session, sf_dir) and
+# every downstream query — the parity family and the Cypher surface —
+# reads the artifact; rebuilding the ETL per query would be benchmarking
+# the wrong thing. localCheckpoint survives spark.catalog.clearCache(),
+# matching "the built graph is on disk".
+@artifact
 def _built_graph(spark: SparkSession, sf_dir: str):
     from ..pipeline import build_graph
 
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _BUILT_CACHE:
-        _BUILT_CACHE[key] = build_graph(
-            _star_graph_long(spark, sf_dir), PARITY_CONFIG
-        )
-    return _BUILT_CACHE[key]
+    return build_graph(_star_graph_long(spark, sf_dir), PARITY_CONFIG)
 
 
 def cypher_star_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -693,18 +660,11 @@ def _bio_graph_long(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     return [diseases, genes, snps, evidence]
 
 
-_BIO_CACHE: dict[str, object] = {}
-
-
+@artifact
 def _bio_graph(spark: SparkSession, sf_dir: str):
     from ..pipeline import build_graph
 
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _BIO_CACHE:
-        _BIO_CACHE[key] = build_graph(
-            _bio_graph_long(spark, sf_dir), PARITY_CONFIG
-        )
-    return _BIO_CACHE[key]
+    return build_graph(_bio_graph_long(spark, sf_dir), PARITY_CONFIG)
 
 
 # queries/genes_to_diseases_ranked_by_otar_score.cypher:1-10, verbatim
@@ -781,22 +741,17 @@ ORDER BY s
 # one EXECUTED sqlite KV store (nodes + aliases + edges) per
 # (application, sf_dir) — the serving artifact is built once, exactly
 # like the graph it serves
-_KV_STORE_CACHE: dict[str, str] = {}
-
-
+@artifact
 def _kv_store(spark: SparkSession, sf_dir: str) -> str:
     import os
     import tempfile
 
     from ..sinks.kv import build_kv_store
 
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _KV_STORE_CACHE:
-        g = _built_graph(spark, sf_dir)
-        db = os.path.join(tempfile.mkdtemp(prefix="grebi_kv_"), "store.sqlite")
-        build_kv_store(g.merged, g.nodes, db, shards=4, edges=g.edges)
-        _KV_STORE_CACHE[key] = db
-    return _KV_STORE_CACHE[key]
+    g = _built_graph(spark, sf_dir)
+    db = os.path.join(tempfile.mkdtemp(prefix="grebi_kv_"), "store.sqlite")
+    build_kv_store(g.merged, g.nodes, db, shards=4, edges=g.edges)
+    return db
 
 
 def kv_edge_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -944,9 +899,6 @@ INC_CONFIG = SubgraphConfig(
     exclude_edges=("id", "parity:sameAs"),
 )
 
-_INC_CACHE: dict[str, dict] = {}
-
-
 def _zone_source(
     spark: SparkSession, sf_dir: str, even_only: bool = False
 ) -> DataFrame:
@@ -1000,6 +952,7 @@ def _inc_states(spark: SparkSession, sf_dir: str) -> dict:
     return {k: _inc_state(spark, sf_dir, k) for k in ("full", "geo", "fused", "upd")}
 
 
+@artifact
 def _inc_state(spark: SparkSession, sf_dir: str, which: str):
     """One maintained state, built lazily per (session, sf_dir, state) —
     a query sampled cold pays only its own dependency chain (geo needs
@@ -1011,9 +964,6 @@ def _inc_state(spark: SparkSession, sf_dir: str, which: str):
         update_datasource,
     )
 
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}:{which}"
-    if key in _INC_CACHE:
-        return _INC_CACHE[key]
     customers, nations, regions = _star_graph_long(spark, sf_dir)
     if which == "base":
         out = build_graph_stateful([customers, nations], PARITY_CONFIG)
@@ -1032,7 +982,6 @@ def _inc_state(spark: SparkSession, sf_dir: str, which: str):
         )
     else:  # pragma: no cover - caller bug
         raise ValueError(which)
-    _INC_CACHE[key] = out
     return out
 
 
@@ -1232,22 +1181,24 @@ def incremental_persist_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     matches, proving the maintained graph round-trips Parquet
     value-for-value (the suite additionally proves maintenance RESUMES
     on the reloaded state)."""
-    import tempfile
-
-    from ..incremental import load_state, save_state
-
-    key = f"persist:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _INC_CACHE:
-        path = tempfile.mkdtemp(prefix="grebi_state_")
-        save_state(_inc_state(spark, sf_dir, "fused"), path)
-        _INC_CACHE[key] = load_state(spark, path)
-    merged = _INC_CACHE[key].graph.merged
+    merged = _reloaded_state(spark, sf_dir).graph.merged
     return merged.select(
         "node_id",
         "prop_key",
         "value",
         F.array_join("datasources", ",").alias("datasources"),
     ).orderBy("node_id", "prop_key", "value", "datasources")
+
+
+@artifact
+def _reloaded_state(spark: SparkSession, sf_dir: str):
+    import tempfile
+
+    from ..incremental import load_state, save_state
+
+    path = tempfile.mkdtemp(prefix="grebi_state_")
+    save_state(_inc_state(spark, sf_dir, "fused"), path)
+    return load_state(spark, path)
 
 
 def state_rollback_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1268,31 +1219,30 @@ def state_rollback_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this pointer swap replaces that full rebuild. Crash-mid-save
     invisibility, in-flight reader isolation across the swap, and
     roll-forward are suite-tested (tests/test_state_versions.py)."""
+    return _merge_profile(_rolled_back_state(spark, sf_dir).graph.merged)
+
+
+@artifact
+def _rolled_back_state(spark: SparkSession, sf_dir: str):
     from ..incremental import load_state_current, rollback_state
 
-    key = f"rollback:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _INC_CACHE:
-        root = _version_root(spark, sf_dir)
-        rollback_state(spark, root)  # v2 → v1: undo the crm retirement
-        _INC_CACHE[key] = load_state_current(spark, root)
-    merged = _INC_CACHE[key].graph.merged
-    return _merge_profile(merged)
+    root = _version_root(spark, sf_dir)
+    rollback_state(spark, root)  # v2 → v1: undo the crm retirement
+    return load_state_current(spark, root)
 
 
+@artifact
 def _version_root(spark: SparkSession, sf_dir: str) -> str:
     """One shared snapshot root per (session, sf_dir): v1 = the full
     three-source graph, v2 = after remove_datasource('crm')."""
+    import tempfile
+
     from ..incremental import save_state_version
 
-    key = f"vroot:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _INC_CACHE:
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="grebi_state_versions_")
-        save_state_version(_inc_state(spark, sf_dir, "full"), root)
-        save_state_version(_inc_state(spark, sf_dir, "geo"), root)
-        _INC_CACHE[key] = root
-    return _INC_CACHE[key]
+    root = tempfile.mkdtemp(prefix="grebi_state_versions_")
+    save_state_version(_inc_state(spark, sf_dir, "full"), root)
+    save_state_version(_inc_state(spark, sf_dir, "geo"), root)
+    return root
 
 
 def state_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1325,6 +1275,7 @@ ORDER BY status, node_id, prop_key, value
 """
 
 
+@artifact
 def graph_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS graph maintenance: a Structured Streaming job watches a
     dump directory (the reference's operational shape — new datasource
@@ -1351,10 +1302,6 @@ def graph_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..incremental import add_datasource, build_graph_stateful
     from ..sources import pysource
-
-    key = f"maint_stream:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _INC_CACHE:
-        return _INC_CACHE[key]
 
     pysource.register(spark)
     customers, nations, regions = _star_graph_long(spark, sf_dir)
@@ -1396,7 +1343,6 @@ def graph_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain()  # restart: the committed offset skips the nations dump
 
     out = _merge_profile(holder["state"].graph.merged).localCheckpoint()
-    _INC_CACHE[key] = out
     return out
 
 
@@ -1414,6 +1360,7 @@ def _parse_verb_file(name: str) -> tuple[str, str | None]:
     return verb, (parts[1] if len(parts) > 1 else None)
 
 
+@artifact
 def graph_maintenance_stream_verbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MIXED-VERB continuous maintenance: a real refresh directory
     carries replaced and retired dumps, not only new ones, so the
@@ -1442,10 +1389,6 @@ def graph_maintenance_stream_verbs(spark: SparkSession, sf_dir: str) -> DataFram
         update_datasource,
     )
     from ..sources import pysource
-
-    key = f"maint_stream_verbs:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _INC_CACHE:
-        return _INC_CACHE[key]
 
     pysource.register(spark)
     customers, nations, regions = _star_graph_long(spark, sf_dir)
@@ -1523,10 +1466,10 @@ def graph_maintenance_stream_verbs(spark: SparkSession, sf_dir: str) -> DataFram
         .orderBy("node_id", "prop_key", "value", "datasources")
         .localCheckpoint()
     )
-    _INC_CACHE[key] = out
     return out
 
 
+@artifact
 def kv_refresh_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serving-tier maintenance, driver-visible: build the EXECUTED
     sqlite KV store from the PRE-verb state, apply the add verb's
@@ -1543,10 +1486,6 @@ def kv_refresh_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..sinks.kv import build_kv_store, refresh_kv_store
-
-    key = f"kvrefresh:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _INC_CACHE:
-        return _INC_CACHE[key]
 
     base = _inc_state(spark, sf_dir, "base")  # shared with the 'full' verb
     db = tempfile.mkdtemp(prefix="grebi_kvrefresh_") + "/store.sqlite"
@@ -1581,10 +1520,10 @@ def kv_refresh_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("node_id")
         .localCheckpoint()
     )
-    _INC_CACHE[key] = out
     return out
 
 
+@artifact
 def _refreshed_core_root(spark: SparkSession, sf_dir: str) -> str:
     """One maintained search core per (session, sf_dir): built from the
     PRE-verb 'base' state, then delta-refreshed with the add verb — the
@@ -1594,18 +1533,14 @@ def _refreshed_core_root(spark: SparkSession, sf_dir: str) -> str:
 
     from ..sinks.solr_jsonl import build_solr_core, refresh_solr_core
 
-    key = f"solrcoreroot:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _INC_CACHE:
-        base = _inc_state(spark, sf_dir, "base")
-        root = tempfile.mkdtemp(prefix="grebi_solrcore_")
-        build_solr_core(
-            base.graph.merged, base.graph.nodes, base.graph.edges, root
-        )
-        refresh_solr_core(spark, _inc_state(spark, sf_dir, "full"), root)
-        _INC_CACHE[key] = root
-    return _INC_CACHE[key]
+    base = _inc_state(spark, sf_dir, "base")
+    root = tempfile.mkdtemp(prefix="grebi_solrcore_")
+    build_solr_core(base.graph.merged, base.graph.nodes, base.graph.edges, root)
+    refresh_solr_core(spark, _inc_state(spark, sf_dir, "full"), root)
+    return root
 
 
+@artifact
 def core_search_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q6 SERVED FROM THE MAINTAINED CORE — the reference's actual read
     path (GrebiApi.java:185-227 queries Solr, the incrementally
@@ -1662,16 +1597,13 @@ def core_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     here the serving tier ranks natively from its own index."""
     from ..sinks.solr_jsonl import bm25_index_scored
 
-    key = f"corebm25:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _INC_CACHE:
-        root = _refreshed_core_root(spark, sf_dir)
-        scored = bm25_index_scored(spark, root, _CORE_BM25_TERMS)
-        _INC_CACHE[key] = (
-            scored.orderBy(F.desc("score"), "node_id")
-            .limit(_CORE_BM25_TOPK)
-            .localCheckpoint()
-        )
-    return _INC_CACHE[key]
+    root = _refreshed_core_root(spark, sf_dir)
+    scored = bm25_index_scored(spark, root, _CORE_BM25_TERMS)
+    return (
+        scored.orderBy(F.desc("score"), "node_id")
+        .limit(_CORE_BM25_TOPK)
+        .localCheckpoint()
+    )
 
 
 ORACLE_CORE_BM25 = f"""
@@ -1723,6 +1655,7 @@ LIMIT {_CORE_BM25_TOPK}
 """
 
 
+@artifact
 def solr_refresh_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search-tier maintenance, driver-visible and EXECUTED: build the
     segment/tombstone search core (sinks.solr_jsonl.build_solr_core)
@@ -1739,10 +1672,6 @@ def solr_refresh_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (07_create_db/solr/solr_import.dockerpy:50-90)."""
     from ..sinks.solr_jsonl import read_solr_core
 
-    key = f"solrrefresh:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _INC_CACHE:
-        return _INC_CACHE[key]
-
     live = read_solr_core(spark, _refreshed_core_root(spark, sf_dir), "nodes")
     out = (
         live.select(
@@ -1753,7 +1682,6 @@ def solr_refresh_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("node_id")
         .localCheckpoint()
     )
-    _INC_CACHE[key] = out
     return out
 
 

@@ -900,7 +900,7 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph_analytics import copurchase_half_edges, max_part_key
 
     # the oriented projection is the session-shared graph artifact
-    # (graph_analytics._EDGES_CACHE) — built once, read by all three legs
+    # (graph_analytics.weighted_half_edges) — built once, read by all three legs
     pairs = copurchase_half_edges(spark, sf_dir)
     e1, e2 = pairs.alias("e1"), pairs.alias("e2")
     # explicit broadcasts: the edge set is ~20 MB here, so both legs build

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact
 from ..session import load_tables
 
 
@@ -660,7 +661,32 @@ ORDER BY c_mktsegment
 
 # --- bucketed co-located join ------------------------------------------------
 
-_BUCKETED_DB_CACHE: dict[str, str] = {}
+@artifact
+def _bucketed_db(spark: SparkSession, sf_dir: str) -> str:
+    import uuid
+
+    db = f"grebi_bucketed_{uuid.uuid4().hex[:12]}"
+    t = load_tables(spark, sf_dir, ("lineitem", "orders"))
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    (
+        t["lineitem"]
+        .select("l_orderkey", "l_extendedprice")
+        .write.format("parquet")
+        .bucketBy(8, "l_orderkey")
+        .sortBy("l_orderkey")
+        .mode("overwrite")
+        .saveAsTable(f"{db}.lineitem_b")
+    )
+    (
+        t["orders"]
+        .select("o_orderkey", "o_orderpriority")
+        .write.format("parquet")
+        .bucketBy(8, "o_orderkey")
+        .sortBy("o_orderkey")
+        .mode("overwrite")
+        .saveAsTable(f"{db}.orders_b")
+    )
+    return db
 
 
 def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -675,31 +701,7 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables: pay one clustered write, then every orderkey join is
     co-located forever. The oracle computes the same aggregate from the
     raw tables — a hash-match proves the bucketed layout is lossless."""
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    suffix = abs(hash(key)) % 10**8
-    db = f"grebi_bucketed_{suffix}"
-    if key not in _BUCKETED_DB_CACHE:
-        t = load_tables(spark, sf_dir, ("lineitem", "orders"))
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-        (
-            t["lineitem"]
-            .select("l_orderkey", "l_extendedprice")
-            .write.format("parquet")
-            .bucketBy(8, "l_orderkey")
-            .sortBy("l_orderkey")
-            .mode("overwrite")
-            .saveAsTable(f"{db}.lineitem_b")
-        )
-        (
-            t["orders"]
-            .select("o_orderkey", "o_orderpriority")
-            .write.format("parquet")
-            .bucketBy(8, "o_orderkey")
-            .sortBy("o_orderkey")
-            .mode("overwrite")
-            .saveAsTable(f"{db}.orders_b")
-        )
-        _BUCKETED_DB_CACHE[key] = db
+    db = _bucketed_db(spark, sf_dir)
     li = spark.table(f"{db}.lineitem_b")
     o = spark.table(f"{db}.orders_b")
     return (

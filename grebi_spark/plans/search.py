@@ -358,7 +358,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.similarity import _query_vector, as_double, cosine
 
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    q = F.array(*[F.lit(x) for x in _query_vector(e, sf_dir)])
+    q = F.array(*[F.lit(x) for x in _query_vector(spark, sf_dir)])
     v = as_double(F.col("embedding"))
 
     lex = _rank_leg(_bm25_scored(spark, sf_dir), "score", "r_lex")

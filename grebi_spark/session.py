@@ -14,6 +14,8 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from .artifacts import artifact
+
 
 def get_spark(
     app_name: str = "grebi_spark",
@@ -179,22 +181,57 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     sc._grebi_spark_shipped = True
 
 
-# Lazy DataFrame HANDLES per (session, table path, mtime) — a handle is a
-# logical plan, not data: every execution through it still scans parquet,
-# so bench runs stay compute-honest (nothing is cached across the timed
-# region). What the memo saves is the per-call driver work of
-# spark.read.parquet — py4j round trips, file listing, footer/schema read
-# — which measured ~0.10-0.14 s per table per call and is paid by nearly
-# every registered query (guide §5: the driver should do almost no
-# repeated metadata work on the query path). The mtime in the key drops
-# the entry when the file/dir is replaced (soak corpora, test scratch).
-_TABLE_CACHE: dict[tuple, "object"] = {}
-_SESSION_CONF_DONE: set[str] = set()
-# last (path, mtime) registered as each session's temp view, so repeat
-# calls skip the per-view py4j round trip; nothing else in the engine
-# registers views under the base-table names (grep: all other
-# createOrReplaceTempView sites use _-prefixed or graph_* names)
-_VIEWS_REGISTERED: dict[tuple, tuple] = {}
+# Lazy DataFrame HANDLES per (session, table path), stamped with the
+# path's mtime — a handle is a logical plan, not data: every execution
+# through it still scans parquet, so bench runs stay compute-honest
+# (nothing is cached across the timed region). What the memo saves is the
+# per-call driver work of spark.read.parquet — py4j round trips, file
+# listing, footer/schema read — which measured ~0.10-0.14 s per table per
+# call and is paid by nearly every registered query (guide §5: the driver
+# should do almost no repeated metadata work on the query path). The
+# stamp drops the entry when the file/dir is replaced (soak corpora, test
+# scratch).
+@artifact(stamp="path")
+def _table(spark: SparkSession, path: str, name: str):
+    df = spark.read.parquet(path)
+    if name == "events":
+        ts_dtype = dict(df.dtypes).get("ts")
+        if ts_dtype == "bigint":
+            # nanos-as-long (see get_spark) → real timestamp column
+            df = df.withColumn(
+                "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
+            )
+        elif ts_dtype == "timestamp_ntz":
+            # no-tz parquet micros; session tz is UTC so values are
+            # unchanged, and watermarks require TimestampType
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+@artifact
+def _session_conf(spark: SparkSession) -> None:
+    # defend against foreign sessions (e.g. the driver harness): the events
+    # table stores TIMESTAMP(NANOS), unreadable unless this legacy conf is
+    # on — it is runtime-settable, so set it here rather than only at build.
+    # The timezone must be UTC for the timestamp_ntz→timestamp cast (and
+    # every date_trunc/unix_micros) to agree with the naive-as-UTC oracles.
+    for conf_key, conf_val in (
+        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        ("spark.sql.session.timeZone", "UTC"),
+    ):
+        try:
+            spark.conf.set(conf_key, conf_val)
+        except Exception:
+            pass  # conf locked down → the session owner already chose a policy
+
+
+@artifact
+def _views(spark: SparkSession) -> dict:
+    """The handle last registered as each base-table temp view, so repeat
+    calls skip the per-view py4j round trip; nothing else in the engine
+    registers views under the base-table names (grep: all other
+    createOrReplaceTempView sites use _-prefixed or graph_* names)."""
+    return {}
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
@@ -214,45 +251,15 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
         "documents",
         "embeddings",
     )
-    # defend against foreign sessions (e.g. the driver harness): the events
-    # table stores TIMESTAMP(NANOS), unreadable unless this legacy conf is
-    # on — it is runtime-settable, so set it here rather than only at build.
-    # The timezone must be UTC for the timestamp_ntz→timestamp cast (and
-    # every date_trunc/unix_micros) to agree with the naive-as-UTC oracles.
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _SESSION_CONF_DONE:
-        for conf_key, conf_val in (
-            ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-            ("spark.sql.session.timeZone", "UTC"),
-        ):
-            try:
-                spark.conf.set(conf_key, conf_val)
-            except Exception:
-                pass  # conf locked down → the session owner already chose a policy
-        _SESSION_CONF_DONE.add(app_id)
+    _session_conf(spark)
+    views = _views(spark)
     out = {}
     for name in names or all_names:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            key = (app_id, path, os.path.getmtime(path))
-            df = _TABLE_CACHE.get(key)
-            if df is None:
-                df = spark.read.parquet(path)
-                if name == "events":
-                    ts_dtype = dict(df.dtypes).get("ts")
-                    if ts_dtype == "bigint":
-                        # nanos-as-long (see get_spark) → real timestamp column
-                        df = df.withColumn(
-                            "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
-                        )
-                    elif ts_dtype == "timestamp_ntz":
-                        # no-tz parquet micros; session tz is UTC so values are
-                        # unchanged, and watermarks require TimestampType
-                        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-                _TABLE_CACHE[key] = df
-            view_key = (app_id, name)
-            if _VIEWS_REGISTERED.get(view_key) != key:
+            df = _table(spark, path, name)
+            if views.get(name) is not df:
                 df.createOrReplaceTempView(name)
-                _VIEWS_REGISTERED[view_key] = key
+                views[name] = df
             out[name] = df
     return out

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..artifacts import artifact
 from ..session import bounded_drain_conf, scratch_dir
 from ..sources.jsonl import JsonlTransform, jsonl_to_nodes
 
@@ -225,40 +226,12 @@ _STREAM_RUN = [0]  # memory-sink names must be unique within a session
 # spark.read.parquet(path).schema is a driver-side py4j + footer read
 # (~0.1 s) repaid by every one of the ~16 streaming queries. A schema is
 # metadata, not data — nothing about the timed computation is cached —
-# and the mtime key drops the entry when the file is replaced (the same
-# contract as session.load_tables' handle memo, guide §5).
-_SCHEMA_CACHE: dict[tuple, "object"] = {}
-
-
+# and the recursive file stamp drops the entry when any file beneath the
+# path is replaced, partitioned layouts included (the same contract as
+# session.load_tables' handle memo, guide §5).
+@artifact(stamp="path")
 def _parquet_schema(spark: SparkSession, path: str):
-    import os
-
-    # For a directory-shaped table the DIRECTORY mtime need not change
-    # when a part file is rewritten in place — key on the max mtime over
-    # the dir's parquet files instead. Entries are stored per (app, path)
-    # and replaced when the mtime moves, so superseded schemas are
-    # dropped rather than accumulated (r9 ADVICE).
-    if os.path.isdir(path):
-        try:
-            mt = max(
-                (
-                    e.stat().st_mtime
-                    for e in os.scandir(path)
-                    if e.name.endswith(".parquet")
-                ),
-                default=os.path.getmtime(path),
-            )
-        except OSError:
-            mt = os.path.getmtime(path)
-    else:
-        mt = os.path.getmtime(path)
-    key = (spark.sparkContext.applicationId, path)
-    ent = _SCHEMA_CACHE.get(key)
-    if ent is not None and ent[0] == mt:
-        return ent[1]
-    sch = spark.read.parquet(path).schema
-    _SCHEMA_CACHE[key] = (mt, sch)
-    return sch
+    return spark.read.parquet(path).schema
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -688,10 +661,7 @@ ORDER BY user_id
 """
 
 
-_SESSION_STAGE_CACHE: dict[str, str] = {}
-
-
-def _single_parquet_file(src: str) -> str:
+def _single_parquet_file(spark: SparkSession, src: str) -> str:
     """Resolve a parquet TABLE path to ONE parquet file for the staging
     helpers (which copy the events table as a single mtime-ordered
     arrival file and pyarrow-read its schema/bounds). The harness
@@ -702,8 +672,6 @@ def _single_parquet_file(src: str) -> str:
     per-file, never consolidates)."""
     import os
 
-    import pyarrow.parquet as pq
-
     if not os.path.isdir(src):
         return src
     parts = sorted(
@@ -713,15 +681,22 @@ def _single_parquet_file(src: str) -> str:
     )
     if len(parts) == 1:
         return parts[0]
-    key = f"singlefile:{src}"
-    if key in _SESSION_STAGE_CACHE:
-        return _SESSION_STAGE_CACHE[key]
+    return _consolidated(spark, tuple(parts))
+
+
+@artifact
+def _consolidated(spark: SparkSession, parts: tuple[str, ...]) -> str:
+    """The part files rewritten as one scratch parquet file."""
+    import os
+
+    import pyarrow.parquet as pq
+
     out = os.path.join(scratch_dir("grebi_singlefile_"), "data.parquet")
-    pq.write_table(pq.read_table(parts), out)
-    _SESSION_STAGE_CACHE[key] = out
+    pq.write_table(pq.read_table(list(parts)), out)
     return out
 
 
+@artifact
 def _session_stage(spark: SparkSession, src: str) -> str:
     """Stage dir for the bounded-drain protocol: the events file plus
     two far-future sentinel files behind it, mtime-ordered so the file
@@ -734,10 +709,7 @@ def _session_stage(spark: SparkSession, src: str) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    key = f"{spark.sparkContext.applicationId}:{src}"
-    if key in _SESSION_STAGE_CACHE:
-        return _SESSION_STAGE_CACHE[key]
-    src = _single_parquet_file(src)  # directory-shaped tables stage too
+    src = _single_parquet_file(spark, src)  # directory-shaped tables stage too
     stage = scratch_dir("grebi_sessions_")
     shutil.copyfile(src, os.path.join(stage, "00_events.parquet"))
     sch = pq.read_schema(src)
@@ -758,7 +730,6 @@ def _session_stage(spark: SparkSession, src: str) -> str:
         ("00_events.parquet", "01_sentinel.parquet", "02_sentinel.parquet")
     ):
         os.utime(os.path.join(stage, name), (1_000_000 + i, 1_000_000 + i))
-    _SESSION_STAGE_CACHE[key] = stage
     return stage
 
 
@@ -825,9 +796,7 @@ ORDER BY user_id, session_start_us
 """
 
 
-_LATE_STAGE_CACHE: dict[str, str] = {}
-
-
+@artifact
 def _late_stage(spark: SparkSession, src: str) -> str:
     """Stage dir proving watermark semantics, one file per micro-batch:
 
@@ -850,10 +819,7 @@ def _late_stage(spark: SparkSession, src: str) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    key = f"{spark.sparkContext.applicationId}:{src}"
-    if key in _LATE_STAGE_CACHE:
-        return _LATE_STAGE_CACHE[key]
-    src = _single_parquet_file(src)  # directory-shaped tables stage too
+    src = _single_parquet_file(spark, src)  # directory-shaped tables stage too
     stage = scratch_dir("grebi_late_")
     shutil.copyfile(src, os.path.join(stage, "00_events.parquet"))
     tbl = pq.read_table(src)
@@ -880,7 +846,6 @@ def _late_stage(spark: SparkSession, src: str) -> str:
     sentinel(1, 366, "03_sentinel_b.parquet")
     for i, name in enumerate(sorted(os.listdir(stage))):
         os.utime(os.path.join(stage, name), (1_000_000 + i, 1_000_000 + i))
-    _LATE_STAGE_CACHE[key] = stage
     return stage
 
 
@@ -941,9 +906,7 @@ ORDER BY 1, 2
 """
 
 
-_OUTER_STAGE_CACHE: dict[str, str] = {}
-
-
+@artifact
 def _outer_stage(spark: SparkSession, src: str) -> str:
     """Stage dir for the outer-join drain: the events file plus two
     far-future sentinel files each holding one CLICK and one PURCHASE
@@ -962,10 +925,7 @@ def _outer_stage(spark: SparkSession, src: str) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    key = f"{spark.sparkContext.applicationId}:{src}"
-    if key in _OUTER_STAGE_CACHE:
-        return _OUTER_STAGE_CACHE[key]
-    src = _single_parquet_file(src)  # directory-shaped tables stage too
+    src = _single_parquet_file(spark, src)  # directory-shaped tables stage too
     stage = scratch_dir("grebi_outer_")
     shutil.copyfile(src, os.path.join(stage, "00_events.parquet"))
     sch = pq.read_schema(src)
@@ -987,7 +947,6 @@ def _outer_stage(spark: SparkSession, src: str) -> str:
         ("00_events.parquet", "01_sentinel.parquet", "02_sentinel.parquet")
     ):
         os.utime(os.path.join(stage, name), (1_000_000 + i, 1_000_000 + i))
-    _OUTER_STAGE_CACHE[key] = stage
     return stage
 
 
@@ -1368,7 +1327,23 @@ ORDER BY user_bucket
 
 
 # one drained checkpoint per (session, sf_dir) — the state is the artifact
-_SS_CKPT: dict[str, str] = {}
+@artifact
+def _statestore_ckpt(spark: SparkSession, sf_dir: str) -> str:
+    stream = _events_stream(spark, sf_dir)
+    agg = stream.groupBy("event_type").agg(F.count("*").alias("n_events"))
+    ckpt = scratch_dir("grebi_ss_ckpt_")
+    _STREAM_RUN[0] += 1
+    with bounded_drain_conf(spark, state_partitions=8):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(f"statestore_seed_{_STREAM_RUN[0]}")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return ckpt
 
 
 def statestore_read_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1389,25 +1364,7 @@ def statestore_read_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition and reads RocksDB/HDFS snapshot files directly — no
     running query needed, scales with the checkpoint, not the input.
     """
-
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _SS_CKPT:
-        stream = _events_stream(spark, sf_dir)
-        agg = stream.groupBy("event_type").agg(F.count("*").alias("n_events"))
-        ckpt = scratch_dir("grebi_ss_ckpt_")
-        _STREAM_RUN[0] += 1
-        with bounded_drain_conf(spark, state_partitions=8):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(f"statestore_seed_{_STREAM_RUN[0]}")
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        _SS_CKPT[key] = ckpt
-    state = spark.read.format("statestore").load(_SS_CKPT[key])
+    state = spark.read.format("statestore").load(_statestore_ckpt(spark, sf_dir))
     return (
         state.groupBy(F.col("key.event_type").alias("event_type"))
         .agg(
@@ -1441,6 +1398,26 @@ else:
             "(state-server wire format); not installed in this container"
         )
     }
+
+
+@artifact
+def _dedup_probe_stage(spark: SparkSession, sf_dir: str) -> str:
+    """Every fifth document, staged as two mtime-ordered arrival waves."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ..session import load_tables
+
+    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
+    pdf = docs.filter(F.col("doc_id") % 5 == 0).toPandas()
+    stage = scratch_dir("grebi_dedupstream_")
+    for i, wave in enumerate((pdf[pdf.doc_id % 10 == 0], pdf[pdf.doc_id % 10 != 0])):
+        path = os.path.join(stage, f"0{i}_wave.parquet")
+        pq.write_table(pa.Table.from_pandas(wave, preserve_index=False), path)
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))
+    return stage
 
 
 def docs_dedup_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1488,23 +1465,7 @@ def docs_dedup_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import load_tables
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    arrivals = docs.filter(F.col("doc_id") % 5 == 0)
-
-    key = f"dedupprobe:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _SESSION_STAGE_CACHE:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        stage = scratch_dir("grebi_dedupstream_")
-        pdf = arrivals.toPandas()
-        for i, wave in enumerate(
-            (pdf[pdf.doc_id % 10 == 0], pdf[pdf.doc_id % 10 != 0])
-        ):
-            path = os.path.join(stage, f"0{i}_wave.parquet")
-            pq.write_table(pa.Table.from_pandas(wave, preserve_index=False), path)
-            os.utime(path, (1_000_000 + i, 1_000_000 + i))
-        _SESSION_STAGE_CACHE[key] = stage
-    stage = _SESSION_STAGE_CACHE[key]
+    stage = _dedup_probe_stage(spark, sf_dir)
 
     idx_root = scratch_dir("grebi_dedupidx_")
     out_dir = scratch_dir("grebi_dedupout_")
@@ -1587,7 +1548,7 @@ def docs_dedup_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch-keyed append, visible to every later micro-batch
         new_bands.write.mode("overwrite").parquet(f"{idx_root}/batch={batch_id}")
 
-    schema = arrivals.schema
+    schema = docs.schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -27,6 +27,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     import grebi_spark.functions.training as tr
+    from grebi_spark import artifacts
 
     out = tempfile.mkdtemp(prefix=f"grebi_soak_train_{n}x_")
     df = spark.read.parquet(f"{BASE}/embeddings.parquet")
@@ -45,22 +46,16 @@ def main() -> None:
 
     for pc in per_cells:
         tr.KMEANS_SAMPLE_PER_CELL = pc
-        tr._CENT_CACHE.clear()
-        tr._GATE_CACHE.clear()
-        tr._K_CACHE.clear()
-        tr._N_CACHE.clear()
+        artifacts.forget(tr.centroids, tr.gate, tr.corpus_n)
         e = spark.read.parquet(f"{out}/embeddings.parquet")
         s = min(nrows, pc * k)
         t0 = time.time()
         # training leg only (mirrors the kmeans_embeddings cache-fill
         # block): Lloyd pass 1 on the sample + centroid collect
-        ckey = tr._cache_key(spark, out)
-        assert ckey not in tr._CENT_CACHE
+        assert artifacts.peek(tr.centroids, spark, out) is None
         t2 = tr
         nloc = e.count()
-        t2._N_CACHE[ckey] = nloc
         kloc = tr.kmeans_k(nloc)
-        t2._K_CACHE[ckey] = kloc
         init = [
             (int(r["vec_id"]), [float(x) for x in r["embedding"]])
             for r in e.filter(F.col("vec_id") < kloc)
@@ -90,7 +85,7 @@ def main() -> None:
         cents = sorted((int(r["cluster"]), [float(x) for x in r["c"]]) for r in cent_rows)
         t_train = time.time() - t0
         t0 = time.time()
-        gate = tr.route_gate(spark, e, cents, kloc, ckey)
+        gate = tr.route_gate(e, cents, kloc, nloc)
         t_gate = time.time() - t0
         print(
             f"SOAK-TRAIN {n}x per_cell={pc} sample~{s} "

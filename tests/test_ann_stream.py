@@ -7,9 +7,11 @@ duplicated or lost across the checkpoint restart.
 
 from pyspark.sql import functions as F
 
+from grebi_spark import artifacts
 from grebi_spark.functions.similarity import (
-    _ANN_INDEX_CACHE,
+    _persisted_index_root,
     _resolve_index_dir,
+    _stream_index_root,
     ann_index_persist_topk,
     ann_stream_ingest_topk,
 )
@@ -17,12 +19,11 @@ from grebi_spark.functions.similarity import (
 SF = "/root/testdata/sf0.001"
 
 
-def _lists(spark, kind: str):
-    from grebi_spark.functions.training import _cache_key
-
-    # exact cache key: a prefix match could pick an index another test
+def _lists(spark, builder):
+    # exact registry key: a prefix match could pick an index another test
     # module built for a DIFFERENT sf_dir in the same session
-    root = _ANN_INDEX_CACHE[f"{kind}:{_cache_key(spark, SF)}"]
+    root = artifacts.peek(builder, spark, SF)
+    assert root is not None
     vdir = _resolve_index_dir(spark, root)
     return spark.read.parquet(f"{vdir}/lists")
 
@@ -31,8 +32,8 @@ def test_streamed_index_equals_bulk_index(spark):
     streamed_topk = [tuple(r) for r in ann_stream_ingest_topk(spark, SF).collect()]
     bulk_topk = [tuple(r) for r in ann_index_persist_topk(spark, SF).collect()]
     assert streamed_topk == bulk_topk
-    streamed = _lists(spark, "annstream")
-    bulk = _lists(spark, "annidx")
+    streamed = _lists(spark, _stream_index_root)
+    bulk = _lists(spark, _persisted_index_root)
     cells = lambda df: sorted(  # noqa: E731
         (r["vec_id"], int(r["cell"])) for r in df.select("vec_id", "cell").collect()
     )
@@ -41,7 +42,7 @@ def test_streamed_index_equals_bulk_index(spark):
 
 def test_stream_folds_each_vector_exactly_once(spark):
     ann_stream_ingest_topk(spark, SF)  # session-cached build
-    streamed = _lists(spark, "annstream")
+    streamed = _lists(spark, _stream_index_root)
     n_corpus = spark.read.parquet(f"{SF}/embeddings.parquet").count()
     assert streamed.count() == n_corpus
     assert streamed.select("vec_id").distinct().count() == n_corpus
@@ -82,13 +83,13 @@ def test_crash_replay_of_a_folded_batch_is_skipped(spark):
     import os
 
     from grebi_spark.functions.similarity import fold_ann_batch, ingest_namespace
-    from grebi_spark.functions.training import _cache_key
 
     ann_stream_ingest_topk(spark, SF)
-    root = _ANN_INDEX_CACHE[f"annstream:{_cache_key(spark, SF)}"]
+    root = artifacts.peek(_stream_index_root, spark, SF)
+    assert root is not None
     before = sorted(
         (r["vec_id"], int(r["cell"]))
-        for r in _lists(spark, "annstream").collect()
+        for r in _lists(spark, _stream_index_root).collect()
     )
     # replay micro-batch 0 — arrival_1, the first drain's single file;
     # its _APPENDED marker landed during the stream (markers are
@@ -103,7 +104,7 @@ def test_crash_replay_of_a_folded_batch_is_skipped(spark):
     assert ran is False
     after = sorted(
         (r["vec_id"], int(r["cell"]))
-        for r in _lists(spark, "annstream").collect()
+        for r in _lists(spark, _stream_index_root).collect()
     )
     assert after == before
 

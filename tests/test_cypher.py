@@ -548,3 +548,45 @@ DELETE r
         == 0
     )
     assert g2.nodes.count() == graph.nodes.count()
+
+
+def test_set_return_expression_matches_planner(graph):  # noqa: F811
+    """A SET statement's trailing RETURN takes the bound-rows shortcut
+    only for bare ``alias`` / ``alias AS name`` items; anything else
+    must return exactly what the planner returns — its rows or its
+    ValueError — never Spark SQL's reading of the expression."""
+    import re
+
+    from grebi_spark.plans.cypher_write import run_cypher_mutation
+
+    prefix = IC_SET_NUM_DESC.split("SET")[0]
+    for ret in ("num_desc", "num_desc AS n", "num_desc + 'x' AS s"):
+        try:
+            want = sorted(
+                tuple(r) for r in run_cypher(graph, f"{prefix} RETURN {ret}").collect()
+            )
+        except ValueError as exc:
+            with pytest.raises(ValueError, match=re.escape(str(exc))):
+                run_cypher_mutation(
+                    graph, f"{prefix} SET ancestor.num_desc = num_desc RETURN {ret}"
+                ).result.collect()
+            continue
+        r = run_cypher_mutation(
+            graph, f"{prefix} SET ancestor.num_desc = num_desc RETURN {ret}"
+        )
+        assert sorted(tuple(x) for x in r.result.collect()) == want
+
+
+def test_stray_node_property_pattern_is_rejected(graph):  # noqa: F811
+    """``{id: ...}`` outside the -[:id]->(x:Id {id: ...}) idiom must
+    raise: dropping the constraint would bind every node."""
+    with pytest.raises(ValueError, match="id-resolution idiom"):
+        run_cypher(
+            graph, 'MATCH (a {id: "mondo:0005044"})-[r]->(b) RETURN count(b) AS n'
+        ).collect()
+    # the idiom itself still resolves
+    n = run_cypher(
+        graph,
+        'MATCH (a)-[:id]->(x:Id {id: "mondo:0005044"}) RETURN count(a) AS n',
+    ).collect()[0]["n"]
+    assert n == 1

@@ -6,6 +6,7 @@ import re
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from grebi_spark import artifacts
 from grebi_spark.operators.groups import id_score
 from grebi_spark.operators.normalise import PrefixMap, rewrite_expr
 
@@ -323,14 +324,14 @@ def test_assign_vectorized_matches_expression(spark, sf_dir):
     import grebi_spark.functions.training as tr
 
     a = [tuple(r) for r in tr.kmeans_embeddings(spark, sf_dir).collect()]
-    tr._CENT_CACHE.clear()
+    artifacts.forget(tr.centroids)
     old = tr._ASSIGN_VEC_MIN_K
     try:
         tr._ASSIGN_VEC_MIN_K = 1  # force the NumPy path
         b = [tuple(r) for r in tr.kmeans_embeddings(spark, sf_dir).collect()]
     finally:
         tr._ASSIGN_VEC_MIN_K = old
-        tr._CENT_CACHE.clear()
+        artifacts.forget(tr.centroids)
     assert a == b
 
 

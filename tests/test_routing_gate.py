@@ -26,6 +26,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from grebi_spark import artifacts
+
 
 def _canon(rows, cols):
     def norm(v):
@@ -93,8 +95,8 @@ def test_gate_accepts_and_routed_kmeans_hash_matches(spark, separable_dir):
 
     df = entry.queries()["kmeans_embeddings"](spark, separable_dir)
     rows = df.collect()
-    ckey = tr._cache_key(spark, separable_dir)
-    assert tr._GATE_CACHE.get(ckey) is True, "gate must ACCEPT on separable data"
+    gate = artifacts.peek(tr.gate, spark, separable_dir)
+    assert gate is True, "gate must ACCEPT on separable data"
     orows, ocols = _oracle_rows(entry.oracle_sql()["kmeans_embeddings"], separable_dir)
     assert _canon([tuple(r) for r in rows], df.columns) == _canon(orows, ocols)
     # sanity: 16 clusters of 64, routed exactly
@@ -107,8 +109,7 @@ def test_routed_semdedup_hash_matches(spark, separable_dir):
 
     df = entry.queries()["semantic_dedup_cells"](spark, separable_dir)
     rows = [tuple(r) for r in df.collect()]
-    ckey = tr._cache_key(spark, separable_dir)
-    assert tr._GATE_CACHE.get(ckey) is True
+    assert artifacts.peek(tr.gate, spark, separable_dir) is True
     orows, ocols = _oracle_rows(
         entry.oracle_sql()["semantic_dedup_cells"], separable_dir
     )
@@ -125,8 +126,7 @@ def test_gate_rejects_on_uniform_corpus(spark, sf_dir):
     import grebi_spark.functions.training as tr
 
     entry.queries()["kmeans_embeddings"](spark, sf_dir).collect()
-    ckey = tr._cache_key(spark, sf_dir)
-    assert tr._GATE_CACHE.get(ckey) is False
+    assert artifacts.peek(tr.gate, spark, sf_dir) is False
     diag = entry.queries()["kmeans_assign_twolevel"](spark, sf_dir).collect()
     n_eval = sum(r["n_eval"] for r in diag)
     n_agree = sum(r["n_agree"] for r in diag)

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import grebi_spark.functions.training as tr
+from grebi_spark import artifacts
 
 
 def test_sample_is_row_local_and_expected_size(spark, sf_dir):
@@ -66,9 +67,7 @@ def test_gate_forced_on_above_ceiling(spark, sf_dir, monkeypatch):
     so the decision is O(1)."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     monkeypatch.setattr(tr, "KMEANS_FLAT_MAX_K", 4)
-    tr._GATE_CACHE.pop("__ceiling_test__", None)
-    assert tr.route_gate(spark, e, [(0, [0.0] * 64)], 5, "__ceiling_test__") is True
-    tr._GATE_CACHE.pop("__ceiling_test__", None)
+    assert tr.route_gate(e, [(0, [0.0] * 64)], 5, n=0) is True
 
 
 def test_gate_decision_matches_oracle_gate_cte(spark, sf_dir):
@@ -80,8 +79,8 @@ def test_gate_decision_matches_oracle_gate_cte(spark, sf_dir):
     import __spark_entry__ as entry
 
     entry.queries()["kmeans_embeddings"](spark, sf_dir).collect()
-    ckey = tr._cache_key(spark, sf_dir)
-    spark_gate = tr._GATE_CACHE[ckey]
+    spark_gate = artifacts.peek(tr.gate, spark, sf_dir)
+    assert spark_gate is not None
 
     con = duckdb.connect()
     con.execute(

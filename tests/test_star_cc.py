@@ -6,6 +6,7 @@ import random
 
 import pytest
 
+from grebi_spark.operators import groups
 from grebi_spark.operators.groups import (
     connected_components,
     connected_components_star,
@@ -17,10 +18,16 @@ def _labels(df):
 
 
 def _compare(spark, pairs):
+    """Three-way differential: star CC, the broadcast label round (every
+    fixture here is far below the byte guard) and the shuffle-join round
+    (forced by a zero guard) must label every vertex identically."""
     e = spark.createDataFrame(pairs, ["src", "dst"])
     got = _labels(connected_components_star(e))
     want = _labels(connected_components(e))
-    assert got == want and len(got) > 0
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(groups, "_CC_BCAST_MAX_BYTES", 0)
+        shuffled = _labels(connected_components(e))
+    assert got == want == shuffled and len(got) > 0
 
 
 def test_chain_high_diameter(spark):
