@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import SubgraphConfig
+from ..session import BROADCAST_JOIN_MAX_BYTES
 
 
 def id_score(col: Column) -> Column:
@@ -49,11 +50,11 @@ def id_score(col: Column) -> Column:
 # broadcast round (the whole per-round update as ONE shuffle + two
 # map-side hash joins against the broadcast labels); larger graphs keep
 # the shuffle-join round. The labels are string PAIRS, so the guard sizes
-# them in bytes, not rows, and uses the session's broadcast-join
-# threshold. The guard is exact (one aggregate over the materialized init
-# frame), the same pattern as graph_analytics.max_part_key: fast path
-# only when provably safe, identical results either way.
-_CC_BCAST_MAX_BYTES = 64 * 1024 * 1024
+# them in bytes (UTF-8, not characters), not rows, against the session's
+# broadcast-join threshold. The guard is one aggregate over the
+# materialized init frame, the same pattern as
+# graph_analytics.max_part_key; results are identical either way.
+_CC_BCAST_MAX_BYTES = BROADCAST_JOIN_MAX_BYTES
 
 
 def connected_components(
@@ -85,12 +86,12 @@ def connected_components(
     # data-bound: each shuffle-join round runs ~4 AQE stages back to
     # back. Broadcasting the labels turns the propagate join and the
     # pointer jump into map-side probes — one shuffle stage per round.)
-    n_labels, n_chars = labels.agg(
-        F.count("*"), F.sum(F.length("id") + F.length("component"))
+    n_labels, n_bytes = labels.agg(
+        F.count("*"), F.sum(F.octet_length("id") + F.octet_length("component"))
     ).collect()[0]
     # per row, an UnsafeRow of two strings carries an 8-byte null bitset
     # and two 8-byte offset/length slots ahead of the string bytes
-    bcast = 24 * n_labels + (n_chars or 0) <= _CC_BCAST_MAX_BYTES
+    bcast = 24 * n_labels + (n_bytes or 0) <= _CC_BCAST_MAX_BYTES
 
     prev_mat = None  # previous round's materialized frame (for unpersist)
     for i in range(max_iterations):

@@ -1540,7 +1540,6 @@ def _refreshed_core_root(spark: SparkSession, sf_dir: str) -> str:
     return root
 
 
-@artifact
 def core_search_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q6 SERVED FROM THE MAINTAINED CORE — the reference's actual read
     path (GrebiApi.java:185-227 queries Solr, the incrementally
@@ -1578,6 +1577,7 @@ _CORE_BM25_TERMS = ("customer", "united", "east")
 _CORE_BM25_TOPK = 15
 
 
+@artifact
 def core_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 SERVED FROM THE MAINTAINED CORE'S STORED POSTINGS INDEX —
     Solr's actual ranking model (Lucene BM25Similarity) under Lucene's

@@ -16,6 +16,10 @@ from pyspark.sql import functions as F
 
 from .artifacts import artifact
 
+# Largest relation (estimated bytes) a join broadcasts: the session's
+# autoBroadcastJoinThreshold, and the connected-components label guard.
+BROADCAST_JOIN_MAX_BYTES = 64 * 1024 * 1024
+
 
 def get_spark(
     app_name: str = "grebi_spark",
@@ -62,7 +66,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.autoBroadcastJoinThreshold", str(BROADCAST_JOIN_MAX_BYTES))
         # the harness events table stores TIMESTAMP(NANOS) which the Spark
         # parquet reader rejects by default; read as long (nanos since epoch)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

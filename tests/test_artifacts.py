@@ -125,10 +125,10 @@ def test_reregisters_persisted_frames_only(spark):
 
 def test_persisted_handles_survive_clear_cache(spark, sf_dir):
     """The multimodal frame handle and the IVF cell assignment come back
-    as the SAME handle, persisted again, after clearCache(); the built
-    graph's localCheckpoint frames are never persisted by the registry."""
+    as the SAME handle, persisted again, after clearCache(); a
+    localCheckpoint artifact frame is never persisted by the registry."""
     from grebi_spark.functions import multimodal, similarity
-    from grebi_spark.plans import parity
+    from grebi_spark.plans import graph_analytics
 
     for query, builder in (
         (multimodal.multimodal_frame_sample, multimodal._frames),
@@ -143,12 +143,24 @@ def test_persisted_handles_survive_clear_cache(spark, sf_dir):
         assert builder(spark, sf_dir) is handle
         assert handle.storageLevel != StorageLevel.NONE
 
-    g = parity._built_graph(spark, sf_dir)
+    half = graph_analytics.weighted_half_edges(spark, sf_dir)
+    assert half.storageLevel == StorageLevel.NONE
     spark.catalog.clearCache()
-    assert parity._built_graph(spark, sf_dir) is g
-    for frame in (g.merged, g.nodes, g.edges):
-        assert frame.storageLevel == StorageLevel.NONE
+    assert graph_analytics.weighted_half_edges(spark, sf_dir) is half
+    assert half.storageLevel == StorageLevel.NONE
     spark.catalog.clearCache()
+
+
+def test_core_search_bm25_is_memoised(spark, sf_dir):
+    """The BM25 top-k over the maintained core is scored and
+    checkpointed once per session; the /search page over the same core
+    is rebuilt per call."""
+    from grebi_spark.plans import parity
+
+    top = parity.core_search_bm25(spark, sf_dir)
+    assert parity.core_search_bm25(spark, sf_dir) is top
+    page = parity.core_search_serving(spark, sf_dir)
+    assert parity.core_search_serving(spark, sf_dir) is not page
 
 
 def test_partitioned_schema_stamp_is_recursive(spark, tmp_path):

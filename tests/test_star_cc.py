@@ -66,3 +66,20 @@ def test_build_groups_star_matches_label(spark):
     got = sorted(map(tuple, build_groups(e, algorithm="star").collect()))
     want = sorted(map(tuple, build_groups(e, algorithm="label").collect()))
     assert got == want and len(got) > 0
+
+
+def test_non_ascii_ids_are_sized_in_bytes(spark):
+    # five two-character ids, each 3-4 bytes in UTF-8: a guard at the
+    # character count (24 per row + 2 × 2 chars) must take the shuffle
+    # round, because the labels are larger than that in bytes
+    pairs = [("é1", "ü2"), ("ü2", "三3"), ("α4", "β5"), ("β5", "é1")]
+    _compare(spark, pairs)
+    e = spark.createDataFrame(pairs, ["src", "dst"])
+    real = groups.F.broadcast
+    for guard, broadcasts in ((groups._CC_BCAST_MAX_BYTES, True), (24 * 5 + 20, False)):
+        calls = []
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(groups.F, "broadcast", lambda df: calls.append(1) or real(df))
+            mp.setattr(groups, "_CC_BCAST_MAX_BYTES", guard)
+            connected_components(e).collect()
+        assert bool(calls) is broadcasts
